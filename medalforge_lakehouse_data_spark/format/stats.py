@@ -7,10 +7,7 @@ file-level min/max/null_count per column — these land in manifest
 entries and drive scan pruning (SURVEY.md §2.4 A3).
 
 Footer reads are metadata-only, so a driver-side thread pool handles
-thousands of files; beyond ``DISTRIBUTE_THRESHOLD`` files we fan the
-reads out over the cluster with a Spark job (each task reads footers
-for a slice of paths) — at 100 TB a table has millions of files and the
-driver must not read them serially.
+the files of one write.
 """
 
 from __future__ import annotations
@@ -23,7 +20,6 @@ import pyarrow.parquet as pq
 
 from medalforge_lakehouse_data_spark.format.metadata import ColumnStats, DataFile
 
-DISTRIBUTE_THRESHOLD = 4096
 # Columns where min/max is useless or expensive to keep (opaque payloads).
 _SKIP_PHYSICAL = {"BYTE_ARRAY"}  # only when logical type is not string
 
@@ -126,7 +122,6 @@ def collect_entries(
     rel_paths: list[str],
     partitions: dict[str, dict[str, Any]] | None = None,
     stat_columns: list[str] | None = None,
-    spark=None,
     bloom_columns: list[str] | None = None,
     bloom_bits_per_key: int = 16,
     bloom_max_bytes: int = 131_072,
@@ -134,26 +129,9 @@ def collect_entries(
     """Build DataFile entries (footer stats + optional key blooms) for
     table-relative paths.
 
-    ``partitions`` maps rel_path → partition values. When ``spark`` is
-    given and the file count is large, the per-file work runs as a
-    Spark job.
-    """
+    ``partitions`` maps rel_path → partition values."""
     partitions = partitions or {}
     bloom_columns = list(bloom_columns or [])
-
-    if spark is not None and len(rel_paths) > DISTRIBUTE_THRESHOLD:
-        sc = spark.sparkContext
-        n_slices = max(32, len(rel_paths) // 512)
-        payload = [
-            (root, rel, stat_columns, partitions.get(rel, {}), bloom_columns,
-             bloom_bits_per_key, bloom_max_bytes)
-            for rel in rel_paths
-        ]
-        return (
-            sc.parallelize(payload, n_slices)
-            .map(lambda t: _one_entry(*t))
-            .collect()
-        )
 
     with ThreadPoolExecutor(max_workers=min(32, max(4, len(rel_paths)))) as ex:
         futs = [

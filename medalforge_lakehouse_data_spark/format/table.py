@@ -32,6 +32,7 @@ import shutil
 import time
 import urllib.parse
 import uuid
+from functools import reduce
 from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -922,7 +923,7 @@ class Table:
         props = meta.properties
         bloom_cols = [c.strip() for c in props.get("bloom.columns", "").split(",") if c.strip()]
         entries = collect_entries(
-            self.root, rels, partitions, stat_cols, spark=spark,
+            self.root, rels, partitions, stat_cols,
             bloom_columns=bloom_cols,
             bloom_bits_per_key=int(props.get("bloom.bits-per-key", 16)),
             bloom_max_bytes=int(props.get("bloom.max-bytes-per-file", 131_072)),
@@ -1464,10 +1465,7 @@ class Table:
             deletes = [d for d in self.delete_files() if (d.seq or 0) > min_seq]
         return self._read_aligned(spark, entries, meta.schema, meta, deletes=deletes)
 
-    # The driver-side delete-application split (below) unions one subplan
-    # per distinct applicable-delete subset; past this many distinct
-    # delete-file sequences it falls back to the per-row seq-rule join
-    # so the plan cannot grow unboundedly with delete-commit count.
+    # Not read by the engine: perfbench sizes its upsert_scan delete cycle with it.
     DELETE_SPLIT_MAX_SEQS = 8
 
     def _read_aligned(self, spark, kept: list[DataFile], present: StructType,
@@ -1475,63 +1473,64 @@ class Table:
         """Read file groups written under older schema versions and align
         them to ``present`` by field id: renamed columns re-alias, widened
         columns cast up, added columns backfill NULL. Single-version
-        tables take the direct-read fast path. Equality-delete files (if
-        any) are then anti-joined per their sequence rule.
+        tables take the direct-read fast path.
 
-        Delete application exploits that a file's sequence is CONSTANT
-        per file: the delete subset applying to a file ({d : d.seq >
-        e.seq}) is nested and monotone in e.seq, so the kept files are
-        segmented driver-side into at most |distinct delete seqs|+1
-        groups, each read plainly and anti-joined on the KEY columns
-        only. This removes the per-row _metadata.file_path projection,
-        the path→seq broadcast join, and the per-row seq comparison that
-        a row-level rule costs on every MoR-affected scan (guide §2.4);
-        with many distinct delete sequences it falls back to the per-row
-        rule so the plan stays bounded."""
-        deletes = list(deletes or [])
+        Equality deletes follow one rule: a delete row removes data rows
+        with equal key values from files whose seq is STRICTLY lower than
+        the delete file's (same-commit and later appends unaffected).
+        Every row is tagged with its file's seq through a literal map
+        keyed by ``_metadata.file_name`` (data file names are unique
+        ``uuid12-part-…`` names, so no URI decoding is involved). The map
+        holds only the files at or above the oldest delete seq; older
+        files miss it and read as -1, which every delete applies to. One
+        ``__dseq > __seq`` anti-join per delete-key tuple then runs
+        against the union of that tuple's delete files."""
+        deletes = deletes or []
+        seq_col = None
         if deletes:
-            seqs = sorted({int(d.seq or 0) for d in deletes})
-            if len(seqs) <= self.DELETE_SPLIT_MAX_SEQS:
-                import bisect as _bisect
-
-                seg: dict[int, list[DataFile]] = {}
-                for e in kept:
-                    i = _bisect.bisect_right(seqs, int(e.seq or 0))
-                    seg.setdefault(i, []).append(e)
-                parts = []
-                for i, files in sorted(seg.items()):
-                    applicable = set(seqs[i:])
-                    df = self._read_groups(spark, files, present, meta,
-                                           with_path=False)
-                    if applicable:
-                        dls = [d for d in deletes
-                               if int(d.seq or 0) in applicable]
-                        df = self._anti_join_delete_keys(spark, df, dls)
-                    parts.append(df)
-                out = parts[0]
-                for p in parts[1:]:
-                    out = out.unionByName(p)
-                return out
-            out = self._read_groups(spark, kept, present, meta, with_path=True)
-            return self._apply_equality_deletes(spark, out, kept, deletes)
-        return self._read_groups(spark, kept, present, meta, with_path=False)
+            floor = min(int(d.seq or 0) for d in deletes)
+            tagged = [(os.path.basename(e.path), int(e.seq or 0))
+                      for e in kept if int(e.seq or 0) >= floor]
+            seq_col = F.lit(-1)
+            if tagged:
+                seq_map = F.create_map(*[F.lit(x) for kv in tagged for x in kv])
+                seq_col = F.coalesce(seq_map[F.col("_metadata.file_name")],
+                                     seq_col)
+        df = self._read_groups(spark, kept, present, meta, seq_col)
+        by_keys: dict[tuple, list[DataFile]] = {}
+        for d in deletes:
+            by_keys.setdefault(tuple(d.delete_keys or []), []).append(d)
+        for keys, dels in by_keys.items():
+            if not keys:
+                continue
+            ddf = reduce(DataFrame.unionByName, [
+                spark.read.parquet(os.path.join(self.root, d.path))
+                .select(*[F.col(k).alias(f"__dk{i}") for i, k in enumerate(keys)],
+                        F.lit(int(d.seq or 0)).alias("__dseq"))
+                for d in dels
+            ])
+            cond = reduce(
+                lambda a, b: a & b,
+                [df[k] == ddf[f"__dk{i}"] for i, k in enumerate(keys)],
+            ) & (ddf["__dseq"] > df["__seq"])
+            if sum(d.rows for d in dels) <= self.CHANGES_BROADCAST_KEY_LIMIT:
+                ddf = F.broadcast(ddf)
+            df = df.join(ddf, on=cond, how="left_anti")
+        return df if seq_col is None else df.drop("__seq")
 
     def _read_groups(self, spark, kept: list[DataFile], present: StructType,
-                     meta: TableMetadata, with_path: bool) -> DataFrame:
-        """Schema-version-grouped aligned read (no delete handling)."""
-        from collections import defaultdict
-
-        groups: dict[int | None, list[DataFile]] = defaultdict(list)
+                     meta: TableMetadata, seq_col=None) -> DataFrame:
+        """Schema-version-grouped aligned read; ``seq_col`` (a Column over
+        the file source's ``_metadata``) is carried as ``__seq``."""
+        groups: dict[int | None, list[DataFile]] = {}
         for e in kept:
-            groups[e.schema_version].append(e)
+            groups.setdefault(e.schema_version, []).append(e)
+        tag = [] if seq_col is None else [seq_col.alias("__seq")]
         parts = []
         for ver, entries in groups.items():
             vschema = meta.schema_at(ver)
             paths = [os.path.join(self.root, e.path) for e in entries]
             df = spark.read.schema(vschema).parquet(*paths)
-            if with_path:
-                # per-row source file, for the seq-based delete rule
-                df = df.withColumn("__path", F.col("_metadata.file_path"))
             if vschema.jsonValue() != present.jsonValue():
                 by_id = {_field_id(f): f for f in vschema.fields}
                 sel = []
@@ -1545,86 +1544,11 @@ class Table:
                         sel.append(F.lit(None).cast(tf.dataType).alias(tf.name))
                     else:
                         sel.append(F.col(sf.name).cast(tf.dataType).alias(tf.name))
-                if with_path:
-                    sel.append(F.col("__path"))
-                df = df.select(*sel)
+                df = df.select(*sel, *tag)
+            elif tag:
+                df = df.select("*", *tag)
             parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _anti_join_delete_keys(self, spark, df: DataFrame,
-                               deletes: list[DataFile]) -> DataFrame:
-        """Anti-join delete-key files that are ALL known to apply to every
-        row of ``df`` (the caller proved seq applicability per file
-        group): plain key-equality anti-joins, no per-row seq test."""
-        from collections import defaultdict
-        from functools import reduce
-
-        by_keys: dict[tuple, list[DataFile]] = defaultdict(list)
-        for d in deletes:
-            by_keys[tuple(d.delete_keys or [])].append(d)
-        for keys, dels in by_keys.items():
-            if not keys:
-                continue
-            ddfs = [
-                spark.read.parquet(os.path.join(self.root, d.path))
-                .select(*[F.col(k).alias(f"__dk{i}") for i, k in enumerate(keys)])
-                for d in dels
-            ]
-            ddf = ddfs[0]
-            for x in ddfs[1:]:
-                ddf = ddf.unionByName(x)
-            cond = reduce(
-                lambda a, b: a & b,
-                [df[k] == ddf[f"__dk{i}"] for i, k in enumerate(keys)],
-            )
-            if sum(d.rows for d in dels) <= 2_000_000:
-                ddf = F.broadcast(ddf)
-            df = df.join(ddf, on=cond, how="left_anti")
-        return df
-
-    def _apply_equality_deletes(self, spark, df: DataFrame, kept: list[DataFile],
-                                deletes: list[DataFile]) -> DataFrame:
-        """Anti-join equality-delete files: a delete row removes data rows
-        with equal key values from files whose seq is STRICTLY lower than
-        the delete file's (same-commit and later appends unaffected)."""
-        from collections import defaultdict
-        from functools import reduce
-
-        # per-row data seq via the source file path (normalized to an
-        # absolute path on both sides — _metadata.file_path is a URI)
-        seq_rows = [(os.path.join(self.root, e.path), int(e.seq or 0)) for e in kept]
-        seq_df = spark.createDataFrame(seq_rows, ["__abs", "__seq"])
-        df = df.withColumn("__abs", F.regexp_replace("__path", "^file:/+", "/"))
-        df = df.join(F.broadcast(seq_df), "__abs", "left").drop("__path", "__abs")
-        df = df.withColumn("__seq", F.coalesce(F.col("__seq"), F.lit(0)))
-
-        by_keys: dict[tuple, list[DataFile]] = defaultdict(list)
-        for d in deletes:
-            by_keys[tuple(d.delete_keys or [])].append(d)
-        for keys, dels in by_keys.items():
-            if not keys:
-                continue
-            ddfs = []
-            for d in dels:
-                ddfs.append(
-                    spark.read.parquet(os.path.join(self.root, d.path))
-                    .select(*[F.col(k).alias(f"__dk{i}") for i, k in enumerate(keys)])
-                    .withColumn("__dseq", F.lit(int(d.seq or 0)))
-                )
-            ddf = ddfs[0]
-            for x in ddfs[1:]:
-                ddf = ddf.unionByName(x)
-            cond = reduce(
-                lambda a, b: a & b,
-                [df[k] == ddf[f"__dk{i}"] for i, k in enumerate(keys)],
-            ) & (ddf["__dseq"] > df["__seq"])
-            if sum(d.rows for d in dels) <= 2_000_000:
-                ddf = F.broadcast(ddf)
-            df = df.join(ddf, on=cond, how="left_anti")
-        return df.drop("__seq")
+        return reduce(DataFrame.unionByName, parts)
 
     def _write_delete_files(self, spark: SparkSession, keys_df: DataFrame,
                             key_cols: list[str], n_files: int = 1) -> list[DataFile]:

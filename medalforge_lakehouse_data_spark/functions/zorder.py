@@ -19,14 +19,19 @@ import numpy as np
 
 
 def normalize_to_bits(v: np.ndarray, vmin, vmax, bits: int) -> np.ndarray:
-    """Min-max scale values into [0, 2^bits). NaN/None → 0."""
+    """Min-max scale values into [0, 2^bits). NaN/None → 0.
+
+    At bits=63, 2^63-1 rounds to the double 2^63; the result is clamped
+    to 2^63-1 (what the JVM's double→long cast gives), so a value at the
+    recorded max keys the same on both paths instead of wrapping."""
     v = np.asarray(v, dtype=np.float64)
     top = float((1 << bits) - 1)
     if vmax is None or vmin is None or vmax <= vmin:
         return np.zeros(len(v), dtype=np.uint64)
     out = (v - float(vmin)) / (float(vmax) - float(vmin)) * top
     out = np.nan_to_num(out, nan=0.0, posinf=top, neginf=0.0)
-    return np.clip(out, 0, top).astype(np.uint64)
+    return np.minimum(np.clip(out, 0, top).astype(np.uint64),
+                      np.uint64((1 << bits) - 1))
 
 
 def _spread3(x: np.ndarray) -> np.ndarray:

@@ -5,7 +5,7 @@ graft brief. Every operator is a pandas UDF (Series→Series, Arrow batch
 transfer); the per-image math inside is numpy (functions/codec.py,
 functions/phash.py). Zero row-at-a-time Python UDFs (input_hint).
 
-External container formats (JPEG/PNG/WebP/video/audio) dispatch through
+External container formats (JPEG/PNG/WebP) dispatch through
 a pluggable codec registry (``register_codec``/``CodecSpec``) — the
 decode libraries aren't in this container, so unregistered formats are
 registry MISSES (NotImplementedError) rather than edit points, while the
@@ -13,8 +13,6 @@ Spark-side plumbing (schema, batching, signatures) is real and tested.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -140,26 +138,10 @@ def resize_udf(out_w: int, out_h: int):
     return _resize
 
 
-def mean_brightness_udf():
-    """pandas UDF: mean pixel intensity (a cheap feature-extraction demo)."""
-
-    @pandas_udf(DoubleType())
-    def _feat(data: pd.Series) -> pd.Series:
-        out = []
-        for b in data:
-            try:
-                out.append(float(codec.decode(bytes(b)).mean()))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, dtype="float64")
-
-    return _feat
-
-
 # ---------------------------------------------------------------------------
 # Pluggable codec registry (round-2 VERDICT missing #2): external container
-# formats (jpeg/png/webp, video, audio) are REGISTRY MISSES, not edit points.
-# A deployment with Pillow/PyAV/soundfile plugs them in:
+# formats (jpeg/png/webp) are REGISTRY MISSES, not edit points.
+# A deployment with Pillow plugs them in:
 #
 #     register_codec(CodecSpec("jpeg",
 #         decode=lambda b: np.asarray(PIL.Image.open(io.BytesIO(b))),
@@ -180,15 +162,6 @@ class CodecSpec:
     fmt: str
     decode: Callable  # bytes -> np.ndarray (H, W) or (H, W, C)
     encode: Callable | None = None  # np.ndarray -> bytes
-    # video-ish formats: bytes, n -> list[np.ndarray] (evenly-strided frames)
-    frames: Callable | None = None
-    # audio-ish formats: bytes -> (duration_s: float, rms: float)
-    audio_features: Callable | None = None
-
-
-def _internal_frames(data: bytes, n: int) -> list:
-    # internal MFR1/MFL1 payloads are single-frame "videos"
-    return [codec.decode(data)]
 
 
 _CODEC_REGISTRY: dict[str, CodecSpec] = {}
@@ -220,12 +193,10 @@ def registered_codecs() -> tuple:
 
 
 # the engine's own numpy codec handles its two internal formats
-register_codec(CodecSpec("raw", decode=codec.decode, encode=codec.encode_raw,
-                         frames=_internal_frames))
+register_codec(CodecSpec("raw", decode=codec.decode, encode=codec.encode_raw))
 register_codec(CodecSpec(
     "lossy", decode=codec.decode,
     encode=lambda px: codec.encode(px, "lossy", 96),
-    frames=_internal_frames,
 ))
 
 
@@ -302,76 +273,6 @@ def resize_any_udf(out_w: int, out_h: int, target_fmt: str = "raw"):
         return pd.Series(out)
 
     return _resize
-
-
-def frame_sample_udf(n_frames: int = 4):
-    """Video frame sampling over (binary, fmt) columns — the Spark-side
-    plumbing (schema: array<binary>, Arrow batching, even-stride sample)
-    is real; per-format decode dispatches through the codec registry
-    (register a PyAV/ffmpeg-backed CodecSpec.frames in production).
-    Internal payloads act as single-frame videos so the path is testable
-    end-to-end."""
-    from pyspark.sql.types import ArrayType
-
-    reg = dict(_CODEC_REGISTRY)  # snapshot into the worker closure
-
-    @pandas_udf(ArrayType(BinaryType()))
-    def _sample(data: pd.Series, fmt: pd.Series) -> pd.Series:
-        out = []
-        for b, f in zip(data, fmt):
-            spec = reg.get(f)
-            if b is None or spec is None:
-                out.append(None)
-                continue
-            try:
-                if spec.frames is not None:
-                    frames = spec.frames(bytes(b), n_frames)
-                else:
-                    frames = [spec.decode(bytes(b))]
-                out.append([codec.encode_raw(px) for px in frames[:n_frames]])
-            except Exception:
-                out.append(None)
-        return pd.Series(out)
-
-    return _sample
-
-
-def audio_features_udf():
-    """Audio feature extraction over (binary, fmt) columns. The schema is
-    the real contract (binary → struct of features, Arrow-batched);
-    per-format extraction dispatches through the codec registry — no
-    audio library ships in this container, so without a registered
-    CodecSpec.audio_features the row yields a NULL struct (filter
-    ``duration_s IS NULL`` downstream to quarantine — same per-row
-    contract as frame_sample_udf, never a batch-killing raise), while a
-    soundfile/librosa-backed registration needs zero code edits."""
-    feat_t = StructType(
-        [
-            StructField("duration_s", DoubleType()),
-            StructField("rms", DoubleType()),
-        ]
-    )
-    reg = dict(_CODEC_REGISTRY)
-
-    @pandas_udf(feat_t)
-    def _features(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
-        # per-ROW failure isolation: a corrupt blob or unregistered fmt
-        # yields a null struct for that row (quarantine-able downstream),
-        # never a batch-killing raise — same contract as frame_sample_udf
-        durs, rms = [], []
-        for b, f in zip(data, fmt):
-            spec = reg.get(f)
-            if b is None or spec is None or spec.audio_features is None:
-                durs.append(None); rms.append(None)
-                continue
-            try:
-                d, r = spec.audio_features(bytes(b))
-            except Exception:
-                d = r = None
-            durs.append(d); rms.append(r)
-        return pd.DataFrame({"duration_s": durs, "rms": rms})
-
-    return _features
 
 
 _VERIFY_T = StructType(

@@ -1,4 +1,4 @@
-"""Explicit skew handling: hot-key detection + salted joins.
+"""Explicit skew handling: salted joins.
 
 AQE's skew-join splitting handles moderate skew; pathological keys
 (e.g. Zipf-duplicated phash values where one key holds 10% of a 10^12
@@ -18,31 +18,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _SALT = "__mf_salt"
-
-
-def hot_keys(
-    df: DataFrame,
-    keys: list[str],
-    threshold_ratio: float = 0.01,
-    sample_fraction: float | None = None,
-    max_keys: int = 100,
-) -> list[tuple]:
-    """Detect keys holding more than ``threshold_ratio`` of (sampled) rows.
-
-    Sampling keeps detection O(sample) — at 10^12 rows a 1e-4 sample
-    still sees every key above the threshold with high probability."""
-    probe = df.sample(fraction=sample_fraction) if sample_fraction else df
-    counts = probe.groupBy(*keys).count()
-    total = probe.count()
-    if total == 0:
-        return []
-    rows = (
-        counts.filter(F.col("count") >= max(2.0, threshold_ratio * total))
-        .orderBy(F.desc("count"))
-        .limit(max_keys)
-        .collect()
-    )
-    return [tuple(r[k] for k in keys) for r in rows]
 
 
 def salted_join(

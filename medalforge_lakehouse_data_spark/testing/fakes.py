@@ -11,10 +11,6 @@ def fake_jpeg_decode(b: bytes):
     return codec.decode(b)
 
 
-def fake_audio_features(b: bytes):
-    return (float(len(b)) / 16000.0, 0.5)
-
-
 def ppm_encode(px) -> bytes:
     """REAL P6 PPM bytes — a genuine external wire format, numpy-only.
     Lets the registry's encode path be exercised end-to-end against a

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from medalforge_lakehouse_data_spark.format import Table
 from medalforge_lakehouse_data_spark.operators.merge import merge_into
-from medalforge_lakehouse_data_spark.operators.skew import hot_keys, salted_join
+from medalforge_lakehouse_data_spark.operators.skew import salted_join
 from medalforge_lakehouse_data_spark.testing.datagen import IMAGES_SCHEMA, images_df
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -138,12 +138,6 @@ def test_salted_join_matches_plain_join(spark):
     a = {(r.k, r.v, r.s) for r in plain.collect()}
     b = {(r.k, r.v, r.s) for r in salted.collect()}
     assert a == b
-
-
-def test_hot_keys_detects_zipf_head(spark):
-    df = images_df(spark, 2000, seed=7)
-    hk = hot_keys(df, ["phash"], threshold_ratio=0.05)
-    assert len(hk) >= 1  # zipf head key holds ~25% of rows
 
 
 def test_merge_salted_path_correct(spark, tmp_path):

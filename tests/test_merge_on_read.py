@@ -232,3 +232,80 @@ def test_mor_conditional_preserves_unfired_duplicate_key_siblings(spark, tmp_pat
     assert m["affected_files"] == 0 and m["delete_rows"] == 1
     rows = sorted((r.k, r.val) for r in t.scan(spark).collect())
     assert rows == [(1, "keep_me"), (1, "patched"), (2, "other")], rows
+
+
+# --------------------- one delete-apply read path (seq-tagged scan)
+
+
+@pytest.fixture(params=["get_spark", "ansi"])
+def session(request, spark):
+    """The repo's test session, and a fresh one with ANSI on (the
+    default of a plain Spark 4 session)."""
+    if request.param == "get_spark":
+        return spark
+    s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "true")
+    return s
+
+
+def _mor_delete(t, spark, rows, schema):
+    merge_into(t, spark.createDataFrame(rows, schema), ["k"], spark,
+               when_matched="delete", when_not_matched=None,
+               strategy="merge-on-read")
+
+
+def _live_delete_seqs(t) -> int:
+    return len({d.seq for d in t.delete_files()})
+
+
+def test_mor_read_escaped_partition_many_delete_seqs(session, tmp_path):
+    """A partition value that needs URI escaping ('a b' is stored under
+    p=a%20b) must not hide a file's sequence number: a key re-appended
+    after its delete stays live when the scan applies 10 delete
+    sequences."""
+    spark = session
+    part = StructType([
+        StructField("k", LongType()),
+        StructField("p", StringType()),
+        StructField("val", StringType()),
+    ])
+    t = Table.create(str(tmp_path / "t"), part, partition_spec=["p"])
+    t.append(spark, spark.createDataFrame(
+        [(i, "a b", f"v{i}") for i in range(20)], part), target_file_count=1)
+    _mor_delete(t, spark, [(3, "a b", "x")], part)
+    t.append(spark, spark.createDataFrame([(3, "a b", "re3")], part))
+    for k in range(10, 19):
+        _mor_delete(t, spark, [(k, "a b", "x")], part)
+    assert _live_delete_seqs(t) == 10
+
+    want = {(i, f"v{i}") for i in range(20) if not 10 <= i <= 18 and i != 3}
+    want.add((3, "re3"))
+    assert {(r.k, r.val) for r in t.scan(spark).collect()} == want
+
+
+def test_mor_read_seq_rule_across_rename(session, tmp_path):
+    """The sequence rule holds at one and at nine live delete sequences,
+    for files written before a rename_column (read through the aligning
+    projection) and after it, including keys re-inserted after their
+    delete that a sequence-blind anti-join would remove."""
+    spark = session
+    t = Table.create(str(tmp_path / "t"), SIMPLE)
+    t.append(spark, spark.createDataFrame(
+        [(i, f"v{i}") for i in range(20)], SIMPLE), target_file_count=2)
+    t.rename_column("val", "v")
+    renamed = StructType([StructField("k", LongType()),
+                          StructField("v", StringType())])
+    _mor_delete(t, spark, [(3, "x"), (7, "x")], renamed)
+    t.append(spark, spark.createDataFrame([(3, "re3")], renamed))
+    assert _live_delete_seqs(t) == 1
+    want = {(i, f"v{i}") for i in range(20) if i not in (3, 7)} | {(3, "re3")}
+    assert {(r.k, r.v) for r in t.scan(spark).collect()} == want
+
+    for k in range(10, 17):
+        _mor_delete(t, spark, [(k, "x")], renamed)
+    t.append(spark, spark.createDataFrame([(10, "re10")], renamed))
+    _mor_delete(t, spark, [(3, "x")], renamed)
+    assert _live_delete_seqs(t) == 9
+    want = {(i, f"v{i}") for i in range(20) if i not in (3, 7)
+            and not 10 <= i <= 16} | {(10, "re10")}
+    assert {(r.k, r.v) for r in t.scan(spark).collect()} == want

@@ -148,7 +148,6 @@ def test_auto_maintenance_folds_trickle_mor_deletes(spark, tmp_path):
 
 
 from medalforge_lakehouse_data_spark.testing.fakes import (  # noqa: E402
-    fake_audio_features as _fake_audio_features,
     fake_jpeg_decode as _fake_jpeg_decode,
 )
 
@@ -167,9 +166,7 @@ def test_codec_registry_plugin_path(spark):
 
     px = (np.arange(64 * 64, dtype=np.float64) % 251).reshape(64, 64)
     payload = codec.encode_raw(px.astype(np.uint8))
-    mm.register_codec(mm.CodecSpec(
-        "jpeg", decode=_fake_jpeg_decode,
-        audio_features=_fake_audio_features))
+    mm.register_codec(mm.CodecSpec("jpeg", decode=_fake_jpeg_decode))
     try:
         assert "jpeg" in mm.registered_codecs()
         got = mm.decode_external(payload, "jpeg")
@@ -178,17 +175,10 @@ def test_codec_registry_plugin_path(spark):
         df = spark.createDataFrame(
             [(1, bytearray(payload), "jpeg"), (2, bytearray(payload), "webp")],
             "id int, data binary, fmt string")
-        out = df.withColumn("frames", mm.frame_sample_udf(2)("data", "fmt")) \
-                .select("id", "frames").collect()
-        by_id = {r.id: r.frames for r in out}
-        assert by_id[1] is not None and len(by_id[1]) == 1
-        assert by_id[2] is None  # unregistered → null, quarantine-able
-
-        feats = {r.id: r for r in df.withColumn(
-            "f", mm.audio_features_udf()("data", "fmt")).select("id", "f.*").collect()}
-        assert feats[1].rms == 0.5 and feats[1].duration_s > 0
-        # unregistered fmt → null features for THAT row, not a batch kill
-        assert feats[2].rms is None and feats[2].duration_s is None
+        out = {r.id: r.small for r in df.withColumn(
+            "small", mm.resize_any_udf(8, 8)("data", "fmt")).collect()}
+        assert codec.decode(bytes(out[1])).shape[:2] == (8, 8)
+        assert out[2] is None  # unregistered → null, quarantine-able
     finally:
         mm.unregister_codec("jpeg")
 

@@ -156,36 +156,35 @@ def test_jvm_zorder_key_bit_identical_to_numpy(spark):
         assert all(x is not None and x >= 0 for x in g)
 
 
-def test_delete_split_read_matches_per_row_rule(spark, tmp_path):
-    """The driver-side delete-application split (segment files by
-    applicable-delete subset, key-only anti-joins) must produce exactly
-    the rows the per-row seq-rule join produces, across interleaved
-    appends and MoR deletes — including re-inserted keys that a
-    seq-blind anti-join would wrongly remove."""
-    t = Table.create(str(tmp_path / "t"), SIMPLE)
-    t.append(spark, spark.createDataFrame(
-        [(i, f"v{i}") for i in range(20)], SIMPLE), target_file_count=2)  # seq 1
-    merge_into(t, spark.createDataFrame([(3, "x"), (7, "x")], SIMPLE),
-               ["k"], spark, when_matched="delete", when_not_matched=None,
-               strategy="merge-on-read")                                  # seq 2
-    t.append(spark, spark.createDataFrame([(3, "re3")], SIMPLE),
-             target_file_count=1)                                         # seq 3
-    merge_into(t, spark.createDataFrame([(10, "x")], SIMPLE),
-               ["k"], spark, when_matched="delete", when_not_matched=None,
-               strategy="merge-on-read")                                  # seq 4
-    t.append(spark, spark.createDataFrame([(10, "re10")], SIMPLE),
-             target_file_count=1)                                         # seq 5
+def test_one_column_zorder_key_parity_at_recorded_bounds(spark):
+    """One clustering column keys with 63 bits, where 2^63-1 rounds to
+    the double 2^63: a value at exactly the recorded max must key to
+    2^63-1 on both the Column path and the numpy kernel (the kernel used
+    to wrap to -2^63). Checked in the repo's session and an ANSI-on one."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DoubleType
 
-    want = {(i, f"v{i}") for i in range(20) if i not in (3, 7, 10)}
-    want |= {(3, "re3"), (10, "re10")}
+    from medalforge_lakehouse_data_spark.maintenance.clustering import (
+        curve_key_col,
+        curve_key_udf,
+    )
 
-    got_split = {(r.k, r.val) for r in t.scan(spark).collect()}
-    assert got_split == want
-    # force the per-row fallback and compare
-    old = Table.DELETE_SPLIT_MAX_SEQS
-    try:
-        Table.DELETE_SPLIT_MAX_SEQS = 0
-        got_row = {(r.k, r.val) for r in t.scan(spark).collect()}
-    finally:
-        Table.DELETE_SPLIT_MAX_SEQS = old
-    assert got_row == want
+    ansi = spark.newSession()
+    ansi.conf.set("spark.sql.ansi.enabled", "true")
+    cases = [
+        ("a", LongType(), [-(2**62), -1, 0, 12345, 2**62]),
+        ("c", DoubleType(), [0.0, 17.5, 255.0, float("inf")]),
+    ]
+    for session in (spark, ansi):
+        for name, dtype, values in cases:
+            finite = [v for v in values if v != float("inf")]
+            bounds = {name: (min(finite), max(finite))}
+            df = session.createDataFrame(
+                [(v,) for v in values], StructType([StructField(name, dtype)]))
+            got = df.select(curve_key_col([name], bounds).alias("k"),
+                            curve_key_udf([name], bounds)(F.col(name)).alias("u"))
+            rows = got.collect()
+            assert [r.k for r in rows] == [r.u for r in rows], name
+            assert rows[0].k == 0
+            assert max(r.k for r in rows) == 2**63 - 1
+            assert all(r.k >= 0 for r in rows)

@@ -46,6 +46,7 @@ from pyspark.sql.types import (
     LongType,
     ShortType,
     StringType,
+    StructField,
     StructType,
     TimestampType,
 )
@@ -169,8 +170,6 @@ def _with_field_ids(schema: StructType, next_id: int = 1):
     """Assign stable field ids (kept in field metadata) where missing.
     Ids survive renames, so scans can align old files to the current
     schema by id (Iceberg-style). Returns (schema, last_id_used)."""
-    from pyspark.sql.types import StructField
-
     used = [fid for f in schema.fields if (fid := _field_id(f)) is not None]
     nid = max([next_id - 1, *used]) + 1
     fields = []
@@ -762,6 +761,10 @@ class Table:
             if snapshot_id is None
             else meta.snapshot_by_id(snapshot_id)
         )
+        return self._snapshot_files(snap, content)
+
+    def _snapshot_files(self, snap: Snapshot | None,
+                        content: str | None = None) -> list[DataFile]:
         if snap is None:
             return []
         out: list[DataFile] = []
@@ -1355,7 +1358,7 @@ class Table:
             rm_data = [e for e in removed if e.content == "data"]
             for d in add_dels:
                 keys = d.delete_keys or []
-                kdf = spark.read.parquet(os.path.join(self.root, d.path))
+                kdf = self._delete_key_scan(spark, [d], keys, schema)
                 if delete_before_images and keys and s.parent_id is not None:
                     pieces.append(_tag(
                         self._delete_before_images(spark, meta, s.parent_id,
@@ -1364,7 +1367,7 @@ class Table:
                     continue
                 pieces.append(_tag(
                     kdf.select(*[
-                        F.col(c).cast(schema[c].dataType).alias(c) if c in keys
+                        F.col(c) if c in keys
                         else F.lit(None).cast(schema[c].dataType).alias(c)
                         for c in names
                     ]),
@@ -1401,7 +1404,6 @@ class Table:
                     self.read_entries(spark, add_data, apply_deletes=False),
                     "insert", s.snapshot_id))
         if not pieces:
-            from pyspark.sql.types import LongType, StructField
             empty = StructType(list(schema.fields) + [
                 StructField("_change_type", StringType(), False),
                 StructField("_commit_snapshot_id", LongType(), False),
@@ -1442,8 +1444,7 @@ class Table:
             return spark.createDataFrame([], schema)
         parent = self._read_aligned(spark, kept, schema, meta,
                                     deletes=metrics.get("_deletes", []))
-        kdf = kdf.select(*[F.col(k).cast(schema[k].dataType).alias(k)
-                           for k in keys])
+        kdf = kdf.select(*keys)
         if entry.rows <= self.CHANGES_BROADCAST_KEY_LIMIT:
             kdf = F.broadcast(kdf)
         return parent.join(kdf, on=list(keys), how="left_semi")
@@ -1462,7 +1463,9 @@ class Table:
         deletes: list[DataFile] = []
         if apply_deletes:
             min_seq = min((e.seq or 0) for e in entries)
-            deletes = [d for d in self.delete_files() if (d.seq or 0) > min_seq]
+            deletes = [d for d in self._snapshot_files(meta.current_snapshot(),
+                                                       "deletes")
+                       if (d.seq or 0) > min_seq]
         return self._read_aligned(spark, entries, meta.schema, meta, deletes=deletes)
 
     # Not read by the engine: perfbench sizes its upsert_scan delete cycle with it.
@@ -1478,13 +1481,15 @@ class Table:
         Equality deletes follow one rule: a delete row removes data rows
         with equal key values from files whose seq is STRICTLY lower than
         the delete file's (same-commit and later appends unaffected).
-        Every row is tagged with its file's seq through a literal map
+        Every data row is tagged with its file's seq through a literal map
         keyed by ``_metadata.file_name`` (data file names are unique
         ``uuid12-part-…`` names, so no URI decoding is involved). The map
         holds only the files at or above the oldest delete seq; older
-        files miss it and read as -1, which every delete applies to. One
-        ``__dseq > __seq`` anti-join per delete-key tuple then runs
-        against the union of that tuple's delete files."""
+        files miss it and read as -1, which every delete applies to. The
+        delete files of each delete-key tuple are read in one
+        schema-pinned scan (``_delete_key_scan``, no footer-inference
+        job), and one ``__dseq > __seq`` anti-join per tuple applies
+        them. Building the plan runs no Spark job."""
         deletes = deletes or []
         seq_col = None
         if deletes:
@@ -1503,12 +1508,9 @@ class Table:
         for keys, dels in by_keys.items():
             if not keys:
                 continue
-            ddf = reduce(DataFrame.unionByName, [
-                spark.read.parquet(os.path.join(self.root, d.path))
-                .select(*[F.col(k).alias(f"__dk{i}") for i, k in enumerate(keys)],
-                        F.lit(int(d.seq or 0)).alias("__dseq"))
-                for d in dels
-            ])
+            ddf = self._delete_key_scan(spark, dels, keys, present).select(
+                *[F.col(k).alias(f"__dk{i}") for i, k in enumerate(keys)],
+                "__dseq")
             cond = reduce(
                 lambda a, b: a & b,
                 [df[k] == ddf[f"__dk{i}"] for i, k in enumerate(keys)],
@@ -1517,6 +1519,24 @@ class Table:
                 ddf = F.broadcast(ddf)
             df = df.join(ddf, on=cond, how="left_anti")
         return df if seq_col is None else df.drop("__seq")
+
+    def _delete_key_scan(self, spark, dels: list[DataFile], keys,
+                         present: StructType) -> DataFrame:
+        """The delete files of one key tuple as one schema-pinned scan.
+        Each key takes its type by name from ``present``, so an int32 key
+        written before a widen (or from an int-typed merge source) reads
+        as the presented long, as data files do. A key missing from
+        ``present`` is left out. ``__dseq`` is each row's delete seq,
+        through a literal map keyed by ``_metadata.file_name`` (delete
+        file names are unique ``uuid12-part-…`` names)."""
+        names = set(present.fieldNames())
+        fields = [StructField(k, present[k].dataType) for k in keys if k in names]
+        seq_map = F.create_map(*[F.lit(x) for d in dels
+                                 for x in (os.path.basename(d.path), int(d.seq or 0))])
+        return (spark.read.schema(StructType(fields))
+                .parquet(*[os.path.join(self.root, d.path) for d in dels])
+                .select(*[f.name for f in fields],
+                        seq_map[F.col("_metadata.file_name")].alias("__dseq")))
 
     def _read_groups(self, spark, kept: list[DataFile], present: StructType,
                      meta: TableMetadata, seq_col=None) -> DataFrame:

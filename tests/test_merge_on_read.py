@@ -11,9 +11,17 @@ Correctness contract (Iceberg-v2-style):
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from medalforge_lakehouse_data_spark.format.table import Table
 from medalforge_lakehouse_data_spark.maintenance import compaction
@@ -309,3 +317,71 @@ def test_mor_read_seq_rule_across_rename(session, tmp_path):
     want = {(i, f"v{i}") for i in range(20) if i not in (3, 7)
             and not 10 <= i <= 16} | {(10, "re10")}
     assert {(r.k, r.v) for r in t.scan(spark).collect()} == want
+
+
+# --------------------- zero-job delete reads (schema-pinned key scans)
+
+
+def _jobs_while(spark, build):
+    """``build()``'s result and the Spark job ids launched while it ran."""
+    sc = spark.sparkContext
+    group = f"plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build read plans")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_mor_read_plans_run_no_spark_job(session, tmp_path):
+    """Building a scan or a read_entries plan over live equality deletes
+    launches no Spark job: delete files are read with a pinned schema,
+    so no per-file footer inference runs, at one and at nine delete
+    sequences."""
+    spark = session
+    t = Table.create(str(tmp_path / "t"), SIMPLE)
+    t.append(spark, spark.createDataFrame(
+        [(i, f"v{i}") for i in range(40)], SIMPLE), target_file_count=8)
+    for n in (1, 9):
+        while _live_delete_seqs(t) < n:
+            _mor_delete(t, spark, [(_live_delete_seqs(t), "x")], SIMPLE)
+        data = t.files(content="data")
+        assert len(data) <= 32
+        plans, jobs = _jobs_while(
+            spark, lambda: [t.scan(spark), t.read_entries(spark, data)])
+        assert jobs == [], f"{len(jobs)} jobs at {n} delete seqs"
+        want = {(i, f"v{i}") for i in range(n, 40)}
+        for df in plans:
+            assert {(r.k, r.val) for r in df.collect()} == want
+
+
+@pytest.mark.parametrize("widen", [False, True],
+                         ids=["int_source", "widened_key"])
+def test_mor_narrow_delete_keys_read_as_table_type(session, tmp_path, widen):
+    """Delete files whose physical key is int32 read as the table's long
+    key: written from an int-typed MoR source into a long-keyed table, or
+    written while the key was int and read after widen_column int→long.
+    Scan rows and changes() delete events stay exact."""
+    spark = session
+    narrow = StructType([StructField("k", IntegerType()),
+                         StructField("val", StringType())])
+    t = Table.create(str(tmp_path / "t"), narrow if widen else SIMPLE)
+    t.append(spark, spark.createDataFrame(
+        [(i, f"v{i}") for i in range(10)], t.schema), target_file_count=2)
+    merge_into(t, spark.createDataFrame([(3, "new3"), (30, "new30")], narrow),
+               ["k"], spark, strategy="merge-on-read")
+    upsert = t.current_snapshot_id()
+    _mor_delete(t, spark, [(7, "x")], narrow)
+    delete = t.current_snapshot_id()
+    if widen:
+        t.widen_column("k", LongType())
+    assert t.scan(spark).schema["k"].dataType == LongType()
+    want = ({(i, f"v{i}") for i in range(10) if i not in (3, 7)}
+            | {(3, "new3"), (30, "new30")})
+    assert {(r.k, r.val) for r in t.scan(spark).collect()} == want
+    events = t.changes(spark, 0).filter("_change_type = 'delete'").collect()
+    assert {(r.k, r.val, r._commit_snapshot_id) for r in events} == {
+        (3, None, upsert), (30, None, upsert), (7, None, delete)}

@@ -112,12 +112,6 @@ class DataFile:
     stats: dict[str, ColumnStats] = field(default_factory=dict)
     blooms: dict[str, dict] = field(default_factory=dict)
     cluster: dict | None = None
-    # [zkey_lo, zkey_hi] — the inclusive curve-key range this file's rows
-    # fall in, recorded by range-partitioned cluster/merge writes when the
-    # keys were computed under the RECORDED normalization bounds
-    # (cluster.bounds). Drives manifest-derived merge re-key boundaries at
-    # scales past the property-recorded cap (round-4 VERDICT #1).
-    zrange: list | None = None
     schema_version: int | None = None  # schema the file was written with
     content: str = "data"  # data | deletes
     seq: int | None = None  # snapshot id of the adding commit (None→0)
@@ -135,8 +129,6 @@ class DataFile:
             out["blooms"] = self.blooms
         if self.cluster:
             out["cluster"] = self.cluster
-        if self.zrange is not None:
-            out["zrange"] = self.zrange
         if self.schema_version is not None:
             out["schema_version"] = self.schema_version
         if self.content != "data":
@@ -157,7 +149,6 @@ class DataFile:
             stats={c: ColumnStats.from_json(s) for c, s in d.get("stats", {}).items()},
             blooms=dict(d.get("blooms", {})),
             cluster=d.get("cluster"),
-            zrange=d.get("zrange"),
             schema_version=d.get("schema_version"),
             content=d.get("content", "data"),
             seq=d.get("seq"),

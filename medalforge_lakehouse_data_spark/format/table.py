@@ -443,7 +443,6 @@ class Table:
                      e.schema_version,
                      {k: str(v) for k, v in (e.partition or {}).items()},
                      _json.dumps(e.cluster) if e.cluster else None,
-                     list(e.zrange) if e.zrange else None,
                      sorted(e.stats.keys()) if e.stats else [])
                     for e in entries]
             from pyspark.sql.types import ArrayType
@@ -454,7 +453,6 @@ class Table:
                 StructField("schema_version", IntegerType()),
                 StructField("partition", MapType(S, S)),
                 StructField("cluster", S),
-                StructField("zrange", ArrayType(L)),
                 StructField("stat_columns", ArrayType(S))])
         raise ValueError(
             f"unknown inspect kind {kind!r}; one of snapshots|history|refs|"

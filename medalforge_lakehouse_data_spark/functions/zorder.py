@@ -125,76 +125,3 @@ def hilbert_index(cols: list[np.ndarray], bits: int) -> np.ndarray:
             bit = (x[d] >> np.uint64(b)) & np.uint64(1)
             out = (out << np.uint64(1)) | bit
     return out.astype(np.int64)
-
-
-def hilbert_point(key: int, ndim: int, bits: int) -> list[int]:
-    """Per-dim coords of ONE Hilbert key — the scalar inverse of
-    ``hilbert_index`` (Skilling's TransposetoAxes). Driver-side only:
-    used by ``hilbert_box_range`` to locate curve cells, never on data."""
-    # unpack the key into the transpose (mirror of the pack loop above)
-    x = [0] * ndim
-    pos = ndim * bits
-    for b in range(bits - 1, -1, -1):
-        for d in range(ndim):
-            pos -= 1
-            x[d] |= ((key >> pos) & 1) << b
-    # Gray decode
-    t = x[ndim - 1] >> 1
-    for i in range(ndim - 1, 0, -1):
-        x[i] ^= x[i - 1]
-    x[0] ^= t
-    # Undo excess work (inverse of the forward loop, q ascending)
-    q = 2
-    top = 1 << bits
-    while q != top and q < top:
-        p = q - 1
-        for i in range(ndim - 1, -1, -1):
-            if x[i] & q:
-                x[0] ^= p
-            else:
-                t = (x[0] ^ x[i]) & p
-                x[0] ^= t
-                x[i] ^= t
-        q <<= 1
-    return x
-
-
-def hilbert_box_range(mins: list[int], maxs: list[int],
-                      bits: int) -> tuple[int, int]:
-    """Exact [min, max] Hilbert key over an axis-aligned INCLUSIVE box of
-    grid coordinates (each in [0, 2^bits)).
-
-    Hilbert is not dominance-monotone, so corner keys do not bound a box
-    the way Morton corners do. But the curve's dyadic cells do: at level
-    L the key space splits into 2^ndim ordered contiguous child ranges,
-    each covering one dyadic sub-box. Greedily descending into the first
-    (resp. last) child whose box intersects the query yields the true
-    in-box min (resp. max) key — any box point inside an earlier child
-    has a smaller key than every point of later children. Pure driver
-    arithmetic: O(bits^2 · ndim · 2^ndim) ≈ 10k ops at 3×21 bits."""
-    ndim = len(mins)
-
-    def _extreme(last: bool) -> int:
-        key = 0
-        for level in range(1, bits + 1):
-            span = 1 << (ndim * (bits - level))
-            shift = bits - level
-            side = 1 << shift
-            order = range((1 << ndim) - 1, -1, -1) if last else range(1 << ndim)
-            for c in order:
-                k0 = key + c * span
-                # k0 is the child's min key; its point lies inside the
-                # child cell, and the cell is a dyadic box of this side
-                corner = hilbert_point(k0, ndim, bits)
-                for d in range(ndim):
-                    lo = (corner[d] >> shift) << shift
-                    if lo + side - 1 < mins[d] or lo > maxs[d]:
-                        break
-                else:
-                    key = k0
-                    break
-            else:  # pragma: no cover - root always intersects
-                raise AssertionError("query box outside curve domain")
-        return key
-
-    return _extreme(False), _extreme(True)

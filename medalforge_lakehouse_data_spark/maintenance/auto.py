@@ -57,19 +57,6 @@ class MaintenancePolicy:
     # across several windows instead of one table-sized rewrite. None =
     # unlimited.
     migrate_max_bytes_per_run: int | None = None
-    # re-record the merge re-key boundary list once live rows exceed the
-    # rows at record time by this factor — merge.py's growth guard stops
-    # serving the stale property list then, and at large file counts the
-    # per-merge manifest-derived fallback costs real driver time
-    # (round-4 VERDICT #2). The repair is METADATA-ONLY: a fresh
-    # equal-frequency list is derived from manifest zranges and
-    # re-recorded. 0 disables.
-    recluster_stale_factor: float = 2.0
-    # when the metadata re-record cannot run (clustered zrange coverage
-    # too low, or live bounds drifted outside the recorded
-    # normalization), fall back to a FULL cluster rewrite. Off by
-    # default — an automatic table-sized rewrite should be opted into.
-    recluster_stale_full: bool = False
 
 
 def appends_since_last_compact(table: Table) -> int:
@@ -121,49 +108,6 @@ def maybe_maintain(
                              "migrate_files", "migrate_bytes",
                              "migrate_remaining_files") if k in km})
 
-    def _refresh_stale_boundaries() -> None:
-        """Round-4 VERDICT #2: once live rows exceed the rows at record
-        time by recluster_stale_factor, merge.py's growth guard stops
-        serving the property boundary list. Re-record a fresh list from
-        manifest zranges (metadata-only — zero Spark jobs) so the next
-        merge reports rekey_boundaries="recorded" again; optionally fall
-        back to a full cluster pass when the manifest layout no longer
-        describes the table."""
-        if not policy.recluster_stale_factor:
-            return
-        props = table.metadata().properties
-        cl_cols = [c.strip() for c in props.get("cluster.columns", "").split(",")
-                   if c.strip()]
-        rec_rows = int(props.get("cluster.boundaries-rows", "0") or 0)
-        if not cl_cols or not rec_rows:
-            return
-        live_rows = sum(e.rows for e in table.files(content="data"))
-        if live_rows < rec_rows * policy.recluster_stale_factor:
-            return
-        curve = props.get("cluster.curve", "zorder")
-        tfb = int(props.get("cluster.target-file-bytes",
-                            policy.target_file_bytes))
-        rec_b = clustering.recorded_bounds(props, cl_cols, curve)
-        bnds = None
-        if rec_b is not None and clustering.bounds_within(
-                clustering.column_bounds(table, cl_cols), rec_b, cl_cols):
-            bnds = clustering.manifest_layout_boundaries(
-                table, cl_cols, curve, tfb)
-        if bnds and len(bnds) <= clustering.MAX_RECORDED_BOUNDARIES:
-            table.set_properties({
-                "cluster.boundaries": ",".join(str(b) for b in bnds),
-                "cluster.boundaries-rows": str(live_rows),
-            })
-            out["boundaries_rerecorded"] = {"rows": live_rows,
-                                            "n_boundaries": len(bnds)}
-        elif policy.recluster_stale_full:
-            km = clustering.cluster_rewrite(
-                table, spark, columns=tuple(cl_cols), curve=curve,
-                target_file_bytes=tfb, mode="full",
-                job_id=f"{job_id}-stalefull")
-            out["boundaries_rerecorded"] = {"full_rewrite": True,
-                                            "files_out": km.get("files_out")}
-
     # delete-file trigger runs FIRST and independently of the append
     # counter: read degradation tracks live delete files, not appends.
     # max_delete_files=0 disables the trigger AND skips the manifest read.
@@ -207,13 +151,11 @@ def maybe_maintain(
     n_appends = appends_since_last_compact(table)
     out["appends_since_compact"] = n_appends
     if n_appends < policy.compact_after_appends:
-        _refresh_stale_boundaries()
         return out
     small = [e for e in table.files(content="data")
              if e.bytes < policy.small_file_bytes]
     out["small_files"] = len(small)
     if len(small) < policy.min_small_files:
-        _refresh_stale_boundaries()
         return out
 
     cm = compaction.compact(
@@ -225,7 +167,4 @@ def maybe_maintain(
                {k: cm.get(k) for k in ("files_in", "files_out", "seconds")})
 
     _recluster_incremental("cluster")
-    # after folding new files into the layout so the re-derived list
-    # covers them
-    _refresh_stale_boundaries()
     return out

@@ -21,7 +21,6 @@ sized by target file bytes; the curve key costs one Arrow pass."""
 from __future__ import annotations
 
 import math
-import os
 import time
 from typing import Sequence
 
@@ -34,7 +33,6 @@ from pyspark.sql.types import LongType
 
 from medalforge_lakehouse_data_spark.format.table import CommitConflictError, Table
 from medalforge_lakehouse_data_spark.functions.zorder import (
-    hilbert_box_range,
     hilbert_index,
     morton_interleave,
     normalize_to_bits,
@@ -67,54 +65,9 @@ def column_bounds(table: Table, columns: Sequence[str], snapshot_id: int | None 
 
 def curve_bits(ncols: int) -> int:
     """Bits per dimension for a 64-bit curve key — the SINGLE definition
-    shared by the vectorized UDF and the driver-side point replica."""
+    shared by the Column expression and the vectorized UDF."""
     bits = 63 // ncols if ncols > 1 else 63
     return min(bits, 21 if ncols == 3 else 32 if ncols == 2 else 63)
-
-
-def point_curve_key(values: Sequence, columns: Sequence[str], bounds: dict,
-                    curve: str = "zorder") -> int:
-    """Curve key of ONE point, driver-side (same numpy kernels as the
-    UDF, 1-element arrays). Used to bound a merge source's key span:
-    Morton interleaving is monotone under component-wise dominance, so
-    every source row's key lies in [key(col mins), key(col maxes)]."""
-    bits = curve_bits(len(columns))
-    norm = [
-        normalize_to_bits(
-            np.asarray([0.0 if v is None else float(v)]), lo, hi, bits
-        )
-        for v, (lo, hi) in zip(values, (bounds[c] for c in columns))
-    ]
-    if curve == "hilbert":
-        return int(hilbert_index(norm, bits)[0])
-    return int(morton_interleave(norm)[0])
-
-
-def box_curve_key_range(mins: Sequence, maxs: Sequence,
-                        columns: Sequence[str], bounds: dict,
-                        curve: str = "zorder") -> tuple[int, int]:
-    """Inclusive curve-key range covering EVERY point of the axis-aligned
-    value box [mins, maxs], driver-side. Morton interleave is monotone
-    under component-wise dominance, so the two corner keys bound the
-    box. Hilbert is not — ``hilbert_box_range`` walks the curve's dyadic
-    cell tree for the exact in-box min/max key instead (this is what
-    lets hilbert-layout merges restrict their served boundary list the
-    same way zorder ones do)."""
-    bits = curve_bits(len(columns))
-
-    def _norm(vals):
-        return [
-            int(normalize_to_bits(
-                np.asarray([0.0 if v is None else float(v)]), lo, hi, bits)[0])
-            for v, (lo, hi) in zip(vals, (bounds[c] for c in columns))
-        ]
-
-    nmins, nmaxs = _norm(mins), _norm(maxs)
-    if curve == "hilbert":
-        return hilbert_box_range(nmins, nmaxs, bits)
-    lo = morton_interleave([np.asarray([v], dtype=np.uint64) for v in nmins])
-    hi = morton_interleave([np.asarray([v], dtype=np.uint64) for v in nmaxs])
-    return int(lo[0]), int(hi[0])
 
 
 def _normalized_col(c, lo, hi, bits: int):
@@ -226,17 +179,18 @@ def with_curve_key(
     return df.withColumn(out_col, udf(*[F.col(c) for c in columns]))
 
 
-def recorded_bounds(props: dict, columns: Sequence[str], curve: str):
-    """Load the normalization min/max (``cluster.bounds``) a full-mode
-    cluster job recorded, if it matches this (curve, columns) layout.
-    Returns {col: (lo, hi)} or None. A consumer re-keying rows against
-    the recorded layout (property boundary list OR manifest zranges)
-    must normalize with THESE bounds, not fresh ones, or the keys and
-    the layout disagree."""
+def recorded_layout(props: dict, columns: Sequence[str], curve: str):
+    """Load the boundary set a full-mode cluster job recorded, if it
+    matches this (curve, columns) layout. Returns (bounds, boundaries,
+    rows_at_record) or None. ``bounds`` are the normalization min/max
+    (``cluster.bounds``) IN FORCE when the boundaries were computed: a
+    consumer re-keying rows against the recorded boundaries must
+    normalize with THESE bounds, not fresh ones, or the keys and the
+    layout disagree."""
     import json as _json
 
-    raw_bounds = props.get("cluster.bounds")
-    if not raw_bounds:
+    raw_bounds, raw = props.get("cluster.bounds"), props.get("cluster.boundaries")
+    if not raw_bounds or not raw:
         return None
     if props.get("cluster.curve", "zorder") != curve:
         return None
@@ -246,28 +200,11 @@ def recorded_bounds(props: dict, columns: Sequence[str], curve: str):
         return None
     try:
         bounds = {c: tuple(v) for c, v in _json.loads(raw_bounds).items()}
-    except (ValueError, AttributeError):
-        return None
-    if any(c not in bounds for c in columns):
-        return None
-    return bounds
-
-
-def recorded_layout(props: dict, columns: Sequence[str], curve: str):
-    """Load the boundary set a full-mode cluster job recorded, if it
-    matches this (curve, columns) layout. Returns (bounds, boundaries,
-    rows_at_record) or None. ``bounds`` are the normalization min/max
-    IN FORCE when the boundaries were computed (see recorded_bounds)."""
-    bounds = recorded_bounds(props, columns, curve)
-    if bounds is None:
-        return None
-    raw = props.get("cluster.boundaries")
-    if not raw:
-        return None
-    try:
         bnds = [int(x) for x in raw.split(",") if x]
         rows = int(props.get("cluster.boundaries-rows", "0"))
-    except (ValueError, AttributeError):
+    except (ValueError, AttributeError, TypeError):
+        return None
+    if any(c not in bounds for c in columns):
         return None
     return bounds, bnds, rows
 
@@ -291,89 +228,6 @@ def bounds_within(inner: dict, outer: dict, columns: Sequence[str],
         except (TypeError, ValueError):
             return False
     return True
-
-
-# Full boundary lists memoized per (table root, snapshot, layout config):
-# the manifest walk behind them is the same cost class as plan_files, so
-# a merge-heavy workload hitting the manifest path repeatedly between
-# commits shouldn't redo it. Snapshot id keys the cache — any commit
-# changes it, so entries can never serve a stale layout. Span filtering
-# happens per call on the cached full list (cheap).
-_LAYOUT_BNDS_CACHE: dict[tuple, list[int] | None] = {}
-_LAYOUT_BNDS_CACHE_MAX = 64
-
-
-def manifest_layout_boundaries(
-    table: Table,
-    columns: Sequence[str],
-    curve: str,
-    target_file_bytes: int,
-    min_coverage: float = 0.5,
-    span: tuple[int, int] | None = None,
-) -> list[int] | None:
-    """Equal-frequency curve-key boundaries derived from the manifests'
-    recorded per-file zkey ranges + row counts — pure driver-side
-    metadata work, zero Spark jobs, and no size cap (round-4 VERDICT
-    #1: the property-recorded list stops at MAX_RECORDED_BOUNDARIES ≈
-    512 GB; manifest stats describe the layout at any scale).
-
-    Treats each clustered file as a uniform row distribution over its
-    [zlo, zhi] range and places boundaries at cumulative row quantiles,
-    targeting one range per ``target_file_bytes``. Valid only for files
-    keyed under the recorded ``cluster.bounds`` normalization (the only
-    writers that stamp zranges). Returns None when the zrange-bearing
-    clustered files cover less than ``min_coverage`` of live data rows
-    (the layout no longer describes the table — run a cluster pass).
-    ``span=(lo, hi)``: optionally restrict the returned list to the
-    merge's own key span so a sliver rewrite doesn't schedule one
-    shuffle partition per table range."""
-    snap = table.metadata().current_snapshot()
-    ck = (table.root, snap.snapshot_id if snap else None, curve,
-          tuple(columns), int(target_file_bytes), float(min_coverage))
-    if ck in _LAYOUT_BNDS_CACHE:
-        bnds = _LAYOUT_BNDS_CACHE[ck]
-    else:
-        bnds = _layout_boundaries_uncached(table, columns, curve,
-                                           target_file_bytes, min_coverage)
-        if len(_LAYOUT_BNDS_CACHE) >= _LAYOUT_BNDS_CACHE_MAX:
-            _LAYOUT_BNDS_CACHE.pop(next(iter(_LAYOUT_BNDS_CACHE)))
-        _LAYOUT_BNDS_CACHE[ck] = bnds
-    if bnds is None:
-        return None
-    if span is not None:
-        slo, shi = span
-        return [b for b in bnds if slo <= b <= shi]
-    return list(bnds)
-
-
-def _layout_boundaries_uncached(table, columns, curve, target_file_bytes,
-                                min_coverage) -> list[int] | None:
-    tag = {"curve": curve, "columns": list(columns)}
-    data = table.files(content="data")
-    total_rows = sum(e.rows for e in data)
-    segs = [(int(e.zrange[0]), int(e.zrange[1]), e.rows, e.bytes)
-            for e in data
-            if e.cluster == tag and e.zrange is not None and e.rows > 0]
-    if not segs or total_rows <= 0:
-        return None
-    cov_rows = sum(s[2] for s in segs)
-    if cov_rows / total_rows < min_coverage:
-        return None
-    n_out = max(1, round(sum(s[3] for s in segs) / max(1, target_file_bytes)))
-    if n_out <= 1:
-        return []
-    segs.sort()
-    targets = [q * cov_rows / n_out for q in range(1, n_out)]
-    bnds: list[int] = []
-    cum = 0.0
-    ti = 0
-    for lo, hi, rows, _b in segs:
-        while ti < len(targets) and cum + rows >= targets[ti]:
-            frac = (targets[ti] - cum) / rows
-            bnds.append(int(lo + frac * (hi - lo)))
-            ti += 1
-        cum += rows
-    return sorted(set(bnds))
 
 
 def curve_boundaries(
@@ -490,45 +344,6 @@ def hash_preimages(spark: SparkSession, n: int) -> list[int]:
     raise RuntimeError(f"could not find hash preimages for n={n}")
 
 
-_PART_ID_RE = __import__("re").compile(r"part-(\d+)")
-
-
-def curve_key_domain(ncols: int) -> tuple[int, int]:
-    """Inclusive range every curve key can take: normalize_to_bits maps
-    each column into [0, 2^bits), so Morton/Hilbert keys over ncols
-    dimensions live in [0, 2^(bits*ncols) - 1]. Edge files are stamped
-    with THESE edges, not ±2^63 sentinels — keys are never negative, and
-    an astronomically wide edge zrange would drag the uniform-distribution
-    interpolation in _layout_boundaries_uncached into empty key space
-    (degrading served merge layouts, and auto-refresh could re-record the
-    poisoned list)."""
-    b = curve_bits(ncols)
-    return 0, (1 << (b * ncols)) - 1
-
-
-def _stamp_zranges(entries: list, boundaries: list[int],
-                   key_domain: tuple[int, int] | None = None) -> None:
-    """Record each written file's inclusive curve-key range on its
-    manifest entry. The shuffle-partition id in the parquet part name IS
-    the range id (hash-preimage routing maps range p to shuffle
-    partition p by construction), and range p's rows fall in
-    [boundaries[p-1], boundaries[p]] — inclusive on BOTH edges because
-    the tie-spread can land boundary-valued rows in either neighbor.
-    The first/last range is clamped to ``key_domain`` (the curve-key
-    value domain) rather than int64 sentinels — see curve_key_domain."""
-    lo_edge, hi_edge = key_domain if key_domain is not None else (0, (1 << 63) - 1)
-    for e in entries:
-        m = _PART_ID_RE.search(os.path.basename(e.path))
-        if not m:
-            continue
-        p = int(m.group(1))
-        if p > len(boundaries):
-            continue
-        lo = boundaries[p - 1] if p > 0 else lo_edge
-        hi = boundaries[p] if p < len(boundaries) else hi_edge
-        e.zrange = [int(lo), int(hi)]
-
-
 def write_range_partitioned(
     table: Table,
     spark: SparkSession,
@@ -536,19 +351,11 @@ def write_range_partitioned(
     n_out: int,
     boundaries: list[int],
     sort_within: list[str],
-    record_zrange: bool = False,
-    key_domain: tuple[int, int] | None = None,
 ) -> list:
     """One-pass range-partitioned write: assign each row its range id from
     precomputed ``boundaries``, map the id through a hash preimage, and
     hash-shuffle — rows land range-clustered without repartitionByRange's
-    second evaluation of the child plan.
-
-    ``record_zrange``: stamp each entry's curve-key range (manifest-
-    derived merge boundaries). Callers must set this ONLY when the keys
-    were computed under the table's recorded ``cluster.bounds``
-    normalization — zranges keyed under drifted bounds would poison the
-    derived layout."""
+    second evaluation of the child plan."""
     if n_out <= 1 or not boundaries:
         return table._write_data_files(
             spark, keyed, target_file_count=max(1, n_out),
@@ -558,13 +365,10 @@ def write_range_partitioned(
     keyed = keyed.withColumn(
         "_px", px_udf(F.col(sort_within[0]), F.col(sort_within[-1]))
     )
-    added = table._write_data_files(
+    return table._write_data_files(
         spark, keyed, target_file_count=n_out,
         sort_within=sort_within, shuffle_col="_px",
     )
-    if record_zrange:
-        _stamp_zranges(added, boundaries, key_domain)
-    return added
 
 
 def cluster_rewrite(
@@ -707,19 +511,6 @@ def cluster_rewrite(
             ).collect()[0]
             for c in missing:
                 bounds[c] = (agg[f"mn_{c}"], agg[f"mx_{c}"])
-        # Full mode records ``bounds`` as the table's normalization, so
-        # its output zranges are consistent by construction. Incremental
-        # runs instead ADOPT the recorded normalization when the live
-        # bounds still fit inside it (1%-of-span tolerance) — their
-        # output then overlays the recorded layout exactly and can carry
-        # zranges; with drifted bounds they key fresh and stay unstamped
-        # (a later full pass re-records).
-        stamp_zrange = mode == "full"
-        if mode == "incremental":
-            rec_b = recorded_bounds(table.metadata().properties, columns, curve)
-            if rec_b is not None and bounds_within(bounds, rec_b, columns):
-                bounds = rec_b
-                stamp_zrange = True
         plan_seq = (snapshot_id if snapshot_id is not None
                     else table.metadata().last_sequence)
         # schema-evolution-safe entry-pinned read (full mode included):
@@ -737,10 +528,7 @@ def cluster_rewrite(
         keys_only = with_curve_key(df.select(*columns), columns, bounds, curve)
         bnds = curve_boundaries(keys_only, n_out)
         added = write_range_partitioned(
-            table, spark, keyed, n_out, bnds, ["_zkey", "_ztie"],
-            record_zrange=stamp_zrange,
-            key_domain=curve_key_domain(len(columns)),
-        )
+            table, spark, keyed, n_out, bnds, ["_zkey", "_ztie"])
         for e in added:
             e.cluster = tag
         # a FULL rewrite replaces every data file; the scan that produced the
@@ -772,37 +560,28 @@ def cluster_rewrite(
     # percentile job per merge. Incremental runs cover only NEW files,
     # whose boundaries do not describe the table — never record those.
     # When a full rewrite completes WITHOUT recording a fresh boundary
-    # list, the previous records are cleared in the same step: stale
-    # properties would keep merges re-keying to a layout this rewrite
-    # just replaced (round-4 ADVICE #4). Past the property cap the
-    # normalization bounds + row count (small) are still recorded —
-    # merges then derive the boundary list from manifest zranges
-    # (manifest_layout_boundaries), which has no cap.
+    # list (past the property cap, or bounds that are not JSON), all
+    # three records are cleared in the same step: stale properties would
+    # keep merges re-keying to a layout this rewrite just replaced
+    # (round-4 ADVICE #4). Merges then compute boundaries per merge.
     if len(files) == len(all_files):
         import json as _json
 
-        rows_rec = str(snap.summary.get("total_rows",
-                                        sum(e.rows for e in added)))
         try:
             bounds_json = _json.dumps(
                 {c: [bounds[c][0], bounds[c][1]] for c in columns})
         except TypeError:
             bounds_json = None  # non-JSON bound type (e.g. date)
-        if bounds_json is None:
+        if bounds_json is None or len(bnds) > MAX_RECORDED_BOUNDARIES:
             table.set_properties({"cluster.bounds": None,
                                   "cluster.boundaries": None,
                                   "cluster.boundaries-rows": None})
-        elif len(bnds) <= MAX_RECORDED_BOUNDARIES:
-            table.set_properties({
-                "cluster.bounds": bounds_json,
-                "cluster.boundaries": ",".join(str(b) for b in bnds),
-                "cluster.boundaries-rows": rows_rec,
-            })
         else:
             table.set_properties({
                 "cluster.bounds": bounds_json,
-                "cluster.boundaries": None,
-                "cluster.boundaries-rows": rows_rec,
+                "cluster.boundaries": ",".join(str(b) for b in bnds),
+                "cluster.boundaries-rows": str(snap.summary.get(
+                    "total_rows", sum(e.rows for e in added))),
             })
     dt = time.monotonic() - t0
     return {

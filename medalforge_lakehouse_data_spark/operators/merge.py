@@ -165,14 +165,13 @@ def merge_into(
             table, spark, source, [],
             {"files_total": 0, "files_kept": 0, "bucket_prune": None},
             src_count, keys, commit_key, cols, t0,
-            plan_seq=table.metadata().last_sequence,
-            source=source, profile=profile,
+            table.metadata().last_sequence, source, profile,
         )
         source.unpersist()
         return out
 
     affected, prune_metrics, plan_seq = _plan_affected(
-        table, source, keys, spark, src_count, profile=profile)
+        table, source, keys, profile)
     # schema-evolution-safe read: aligns old-version files by field id
     target = table.read_entries(spark, affected)
 
@@ -186,8 +185,7 @@ def merge_into(
         )
         out = _write_and_commit(
             table, spark, result, affected, prune_metrics, src_count,
-            keys, commit_key, cols, t0, plan_seq, source=source,
-            update_columns=update_columns, profile=profile,
+            keys, commit_key, cols, t0, plan_seq, source, profile,
         )
         source.unpersist()
         return out
@@ -240,8 +238,7 @@ def merge_into(
         result = result.unionByName(p)
     out = _write_and_commit(
         table, spark, result, affected, prune_metrics, src_count,
-        keys, commit_key, cols, t0, plan_seq, source=source,
-        profile=profile,
+        keys, commit_key, cols, t0, plan_seq, source, profile,
     )
     source.unpersist()
     return out
@@ -256,8 +253,8 @@ def _source_profile(source, keys: list[str], cl_cols: list[str]):
                      struct(keys)) groups NULL keys like groupBy does,
                      so cnt > dk ⇔ a duplicate-key group exists
       mn_k / mx_k    min/max of the first merge key (file pruning tier 1)
-      mn_/mx_/nn_<c> min/max/null-count per cluster column (layout
-                     re-key span restriction)
+      mn_/mx_<c>     min/max per cluster column (layout re-key: source
+                     values must fit the recorded normalization bounds)
 
     Replaces four separate jobs (count, dup-check groupBy, key-bounds
     agg, cluster-stats agg) with one pass (guide §1.2: fewer passes)."""
@@ -272,12 +269,11 @@ def _source_profile(source, keys: list[str], cl_cols: list[str]):
         aggs += [
             F.min(c).alias(f"mn_{c}"),
             F.max(c).alias(f"mx_{c}"),
-            F.sum(F.col(c).isNull().cast("long")).alias(f"nn_{c}"),
         ]
     return source.agg(*aggs).collect()[0]
 
 
-def _plan_affected(table, source, keys, spark, src_count, profile=None):
+def _plan_affected(table, source, keys, profile):
     """Prune the target files a merge must consider (metadata only), four
     tiers:
       0. partition-level: a bucket(key, N) transform in the partition spec
@@ -301,10 +297,10 @@ def _plan_affected(table, source, keys, spark, src_count, profile=None):
 
     k0 = keys[0]
     # distinct-key count for the density bounds below: the exact dk from
-    # the shared profile when available. Row count is only an upper bound
-    # on distinct keys — a duplicate-heavy source (1M rows over 100 keys)
-    # must not skip pruning tiers sized on DISTINCT keys (ADVICE r5 #3).
-    dk = int(profile["dk"]) if profile is not None else src_count
+    # the shared profile. Row count is only an upper bound on distinct
+    # keys — a duplicate-heavy source (1M rows over 100 keys) must not
+    # skip pruning tiers sized on DISTINCT keys (ADVICE r5 #3).
+    dk = int(profile["dk"])
     plan_filters: list = []
     bucket_prune = None
     for p in table.partition_spec:
@@ -329,12 +325,7 @@ def _plan_affected(table, source, keys, spark, src_count, profile=None):
             bucket_prune = "collected"
             if bkts:
                 plan_filters.append((fname, "in", tuple(bkts)))
-    if profile is not None:
-        mn, mx = profile["mn_k"], profile["mx_k"]
-    else:
-        b = source.agg(F.min(k0).alias("mn"), F.max(k0).alias("mx")).collect()[0]
-        mn, mx = b["mn"], b["mx"]
-    plan_filters.append((k0, "between", (mn, mx)))
+    plan_filters.append((k0, "between", (profile["mn_k"], profile["mx_k"])))
     # sequence this merge plans/reads at — a MoR delete committed after it
     # would not apply to the rewritten rows; rewrite_files validates
     plan_seq = table.metadata().last_sequence
@@ -353,7 +344,7 @@ def _plan_affected(table, source, keys, spark, src_count, profile=None):
 def _merge_on_read_conditional(table, source, keys, spark, when_matched,
                                when_not_matched, matched_condition,
                                update_columns, commit_key, src_count, cols,
-                               t0, profile=None) -> dict:
+                               t0, profile) -> dict:
     """Conditional / column-subset MERGE under merge-on-read (round-3
     VERDICT missing #2): read ONLY the matched rows of the pruned
     affected files, evaluate ``WHEN MATCHED AND cond``, and commit one
@@ -384,7 +375,7 @@ def _merge_on_read_conditional(table, source, keys, spark, when_matched,
             raise ValueError(f"update_columns not updatable (missing or keys): {bad}")
     for attempt in range(5):
         affected, prune_metrics, plan_seq = _plan_affected(
-            table, source, keys, spark, src_count, profile=profile)
+            table, source, keys, profile)
         target = table.read_entries(spark, affected)
         small = src_count <= BROADCAST_ROW_LIMIT
         t, s = target.alias("t"), (F.broadcast(source) if small else source).alias("s")
@@ -579,38 +570,9 @@ def _conditional_merge_rows(
     return out
 
 
-def _merge_key_span(affected, sb, cl_cols, rec_bounds, curve,
-                    box_curve_key_range) -> tuple[int, int] | None:
-    """Inclusive curve-key span every merge-result row falls in, or None
-    when it cannot be bounded. Kept target rows are bounded by their
-    affected files' recorded zranges; verbatim source rows by the curve
-    key range of the source's value box — Morton via corner keys
-    (interleave is monotone under component-wise dominance), Hilbert via
-    the exact dyadic-cell box cover (hilbert_box_range)."""
-    lo = hi = None
-    for e in affected:
-        if e.zrange is None:
-            return None  # untagged file in the set — rows unbounded
-        lo = e.zrange[0] if lo is None else min(lo, e.zrange[0])
-        hi = e.zrange[1] if hi is None else max(hi, e.zrange[1])
-    if sb is None:
-        return None  # no source bounds collected — source rows unbounded
-    if any(sb[f"nn_{c}"] for c in cl_cols):
-        return None  # nulls key at coordinate 0, outside the value box
-    if all(sb[f"mn_{c}"] is not None for c in cl_cols):
-        slo, shi = box_curve_key_range(
-            [sb[f"mn_{c}"] for c in cl_cols],
-            [sb[f"mx_{c}"] for c in cl_cols], cl_cols, rec_bounds, curve)
-        lo = slo if lo is None else min(lo, slo)
-        hi = shi if hi is None else max(hi, shi)
-    if lo is None or hi is None:
-        return None
-    return (int(lo), int(hi))
-
-
 def _write_and_commit(table, spark, result, affected, prune_metrics, src_count,
-                      keys, commit_key, cols, t0, plan_seq=None,
-                      source=None, update_columns=None, profile=None) -> dict:
+                      keys, commit_key, cols, t0, plan_seq, source,
+                      profile) -> dict:
     """Shared MERGE tail: size outputs, preserve any recorded clustering
     layout, write the replacement files, and commit the rewrite."""
     # size outputs to the incoming data volume; the rows-based floor covers
@@ -648,102 +610,36 @@ def _write_and_commit(table, spark, result, affected, prune_metrics, src_count,
     avg_row_bytes = (tb / tr) if tr else 0
     est_result_bytes = bytes_affected + int(src_count * avg_row_bytes)
     served_bnds = None
-    bnds_source = None
-    key_span = None
     if cl_cols and all(c in cols for c in cl_cols) and est_result_bytes >= rekey_min:
         from medalforge_lakehouse_data_spark.maintenance.clustering import (
-            box_curve_key_range,
+            bounds_within,
             column_bounds,
-            manifest_layout_boundaries,
-            recorded_bounds,
             recorded_layout,
             with_curve_key,
         )
 
-        # Serve the range boundaries of the table's recorded layout
-        # instead of running a keys-only percentile job per merge
-        # (round-3 VERDICT #1a), from one of two sources:
-        #   "recorded" — the cluster.boundaries property list (full-mode
-        #      cluster jobs up to MAX_RECORDED_BOUNDARIES), while table
-        #      rows < 2x rows at record time (growth staleness);
-        #   "manifest" — equal-frequency boundaries derived driver-side
-        #      from the clustered files' per-entry zkey ranges + row
-        #      counts (round-4 VERDICT #1: no size cap, and current by
-        #      construction — it reads the LIVE file layout).
-        # Both are valid only while the rows being re-keyed normalize
-        # IDENTICALLY to how the layout was keyed:
-        #   1. current table bounds ⊆ recorded cluster.bounds
-        #      (metadata-only),
-        #   2. source bounds ⊆ recorded bounds (one agg on the cached
-        #      source — far cheaper than the keys-only scan it replaces).
-        # Any miss falls back to the fresh percentile pass.
+        # Serve the range boundaries a full cluster job recorded in the
+        # cluster.boundaries property instead of running a keys-only
+        # percentile job per merge (round-3 VERDICT #1a), while table
+        # rows < 2x rows at record time (growth staleness). Valid only
+        # while the rows being re-keyed normalize IDENTICALLY to how the
+        # layout was keyed: current table bounds and source bounds must
+        # both lie inside the recorded cluster.bounds (bounds_within's
+        # 1%-of-span tolerance — a lossy transcode shifts phash stats by
+        # ~2^21 on a 2^63 span). Any miss, a missing list (past
+        # MAX_RECORDED_BOUNDARIES) or a stale one falls back to the
+        # fresh percentile pass below.
         cur_bounds = column_bounds(table, cl_cols)
-        rec_bounds = recorded_bounds(props, cl_cols, curve)
-        sb = None
-        if rec_bounds is not None:
-
-            # Containment with 1%-of-span tolerance: values marginally
-            # outside the recorded bounds clamp at the curve edge (a
-            # no-op for pruning quality at that magnitude — e.g. a lossy
-            # transcode shifts phash stats by ~2^21 on a 2^63 span).
-            # GROSS overshoot would pile rows into the edge partition,
-            # so that still falls back to a fresh percentile pass.
-            def _within(lo, hi, c):
-                rlo, rhi = rec_bounds[c]
-                try:
-                    tol = 0.01 * (float(rhi) - float(rlo))
-                except (TypeError, ValueError):
-                    return False
-                return (lo is not None and float(lo) >= float(rlo) - tol
-                        and float(hi) <= float(rhi) + tol)
-
-            ok = all(_within(cur_bounds[c][0], cur_bounds[c][1], c)
-                     for c in cl_cols)
-            if ok and source is not None and all(c in source.columns for c in cl_cols):
-                # null counts included: a null cluster-column value keys
-                # at coordinate 0, outside the [key(mins), key(maxes)]
-                # dominance bound — the span restriction must then be
-                # dropped (boundaries list served in full instead).
-                # Served from the merge's single profiling pass when the
-                # caller computed one (no extra agg job per merge).
-                pdict = profile.asDict() if profile is not None else {}
-                if all(f"mn_{c}" in pdict for c in cl_cols):
-                    sb = profile
-                else:
-                    sb = source.agg(
-                        *[F.min(c).alias(f"mn_{c}") for c in cl_cols],
-                        *[F.max(c).alias(f"mx_{c}") for c in cl_cols],
-                        *[F.sum(F.col(c).isNull().cast("long")).alias(f"nn_{c}")
-                          for c in cl_cols],
-                    ).collect()[0]
-                ok = all(
-                    sb[f"mn_{c}"] is None
-                    or _within(sb[f"mn_{c}"], sb[f"mx_{c}"], c)
-                    for c in cl_cols)
-            rec = recorded_layout(props, cl_cols, curve) if ok else None
-            if rec is not None:
-                _, rec_bnds, rec_rows = rec
-                if rec_rows > 0 and tr <= 2 * rec_rows:
-                    bounds, served_bnds = rec_bounds, rec_bnds
-                    bnds_source = "recorded"
-            if ok and served_bnds is None:
-                # Span restriction is valid only when every result row's
-                # key is bounded by an affected file's zrange (verbatim
-                # target rows) or the source dominance span (verbatim
-                # source values). A column-subset UPDATE that touches
-                # SOME but not all cluster columns produces mixed rows
-                # bounded by neither — serve the full list then.
-                uc = set(update_columns or [])
-                mixed = bool(uc & set(cl_cols)) and not set(cl_cols) <= uc
-                span = (None if mixed else
-                        _merge_key_span(affected, sb, cl_cols, rec_bounds,
-                                        curve, box_curve_key_range))
-                mb = manifest_layout_boundaries(
-                    table, cl_cols, curve, cluster_target, span=span)
-                if mb is not None:
-                    bounds, served_bnds = rec_bounds, mb
-                    bnds_source = "manifest"
-                    key_span = span  # every result row provably inside
+        rec = recorded_layout(props, cl_cols, curve)
+        if rec is not None:
+            rec_bounds, rec_bnds, rec_rows = rec
+            # an all-NULL source column keys at coordinate 0: in range
+            src_bounds = {c: (profile[f"mn_{c}"], profile[f"mx_{c}"])
+                          for c in cl_cols if profile[f"mn_{c}"] is not None}
+            if (0 < rec_rows and tr <= 2 * rec_rows
+                    and bounds_within(cur_bounds, rec_bounds, cl_cols)
+                    and bounds_within(src_bounds, rec_bounds, list(src_bounds))):
+                bounds, served_bnds = rec_bounds, rec_bnds
         if bounds is None and all(cur_bounds[c][0] is not None for c in cl_cols):
             bounds = cur_bounds
         if bounds is not None:
@@ -759,59 +655,36 @@ def _write_and_commit(table, spark, result, affected, prune_metrics, src_count,
         round((est_result_bytes * 1.2) / target_file_bytes),
         math.ceil(rows_est / max(1, rows_per_file)),
     )
-    if sort_within is not None and bounds is not None:
+    if sort_within is not None:
         from medalforge_lakehouse_data_spark.maintenance.clustering import (
             curve_boundaries,
-            with_curve_key,
             write_range_partitioned,
         )
 
         if served_bnds is not None:
-            # Served layout path (recorded properties or manifest-
-            # derived): the boundaries ARE the table's file-range layout
-            # — rewriting affected files on them preserves alignment
-            # exactly, with zero extra jobs. Ranges outside the merge's
-            # key span come out empty (no file written). n_out follows
-            # the boundary count.
+            # Served layout path: the boundaries ARE the table's
+            # file-range layout — rewriting affected files on them
+            # preserves alignment exactly, with zero extra jobs. Ranges
+            # outside the merge's key span come out empty (no file
+            # written). n_out follows the boundary count.
             bnds = served_bnds
             n_out = len(bnds) + 1
         else:
             # Fallback: range boundaries from a keys-only pass over the
             # AFFECTED files (cluster columns pruned at the scan; the
-            # join result is NOT re-executed) + one-pass range write —
-            # repartitionByRange's sampler would run the whole merge
-            # join a second time, the main real cost behind the round-2
-            # maint_merge regression (5.4×).
-            keys_only = None
+            # join result is NOT re-executed) and the (cached) source,
+            # whose keys insert-heavy merges need or the quantiles skew,
+            # then a one-pass range write — repartitionByRange's sampler
+            # would run the whole merge join a second time, the main
+            # real cost behind the round-2 maint_merge regression (5.4×).
+            keys_only = source.select(*cl_cols)
             if affected:
-                keys_only = table.read_entries(spark, affected).select(*cl_cols)
-            if source is not None and all(c in source.columns for c in cl_cols):
-                # insert-heavy merges: the (cached) source contributes most
-                # of the result rows — include its keys or the quantiles skew
-                src_keys = source.select(*cl_cols)
-                keys_only = (src_keys if keys_only is None
-                             else keys_only.unionByName(src_keys))
-            bnds = (curve_boundaries(
-                        with_curve_key(keys_only, cl_cols, bounds, curve), n_out)
-                    if keys_only is not None else [])
-        # zranges stamped only on the served paths (keys under the
-        # recorded cluster.bounds normalization); the computed fallback
-        # keys under fresh bounds, whose zranges would poison the
-        # manifest-derived layout
-        from medalforge_lakehouse_data_spark.maintenance.clustering import (
-            curve_key_domain,
-        )
-
-        # edge-file zrange stamps clamp to the merge's own key span when
-        # one was proven (every result row lies inside it), else to the
-        # curve-key value domain — never ±2^63 sentinels, which would
-        # poison manifest-derived boundary interpolation (ADVICE r5 #2)
+                keys_only = table.read_entries(spark, affected) \
+                    .select(*cl_cols).unionByName(keys_only)
+            bnds = curve_boundaries(
+                with_curve_key(keys_only, cl_cols, bounds, curve), n_out)
         added = write_range_partitioned(
-            table, spark, result, n_out, bnds, sort_within,
-            record_zrange=served_bnds is not None,
-            key_domain=(key_span if key_span is not None
-                        else curve_key_domain(len(cl_cols))),
-        )
+            table, spark, result, n_out, bnds, sort_within)
     else:
         added = table._write_data_files(
             spark, result, target_file_count=n_out, sort_within=sort_within
@@ -840,7 +713,7 @@ def _write_and_commit(table, spark, result, affected, prune_metrics, src_count,
         "affected_files": len(affected),
         "files_total": prune_metrics["files_total"],
         "added_files": len(added),
-        "rekey_boundaries": (bnds_source if bnds_source is not None
+        "rekey_boundaries": ("recorded" if served_bnds is not None
                              else "computed" if sort_within is not None
                              else None),
         "bucket_prune": prune_metrics.get("bucket_prune"),

@@ -111,40 +111,3 @@ def test_phash_hamming_symmetry(a, b):
     d1 = phash.hamming64(np.array([ha]), np.array([hb]))[0]
     d2 = phash.hamming64(np.array([hb]), np.array([ha]))[0]
     assert d1 == d2 and 0 <= d1 <= 64
-
-
-# ---------------------------------------- hilbert inverse + box cover
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.integers(0, 2**31 - 1), st.sampled_from([(1, 16), (2, 31), (3, 21)]))
-def test_hilbert_point_inverts_index(seed, shape):
-    ndim, bits = shape
-    rng = np.random.default_rng(seed)
-    cols = [rng.integers(0, 1 << min(bits, 62), 64, dtype=np.uint64)
-            for _ in range(ndim)]
-    keys = zorder.hilbert_index(cols, bits)
-    mask = (1 << (ndim * bits)) - 1
-    for j in range(0, 64, 7):
-        pt = zorder.hilbert_point(int(keys[j]) & mask, ndim, bits)
-        assert pt == [int(c[j]) for c in cols]
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.integers(0, 2**31 - 1), st.sampled_from([(1, 5), (2, 5), (3, 4)]))
-def test_hilbert_box_range_is_exact(seed, shape):
-    """hilbert_box_range == brute-force min/max of hilbert_index over
-    every point of the box (small grids so enumeration is feasible)."""
-    import itertools
-
-    ndim, bits = shape
-    rng = np.random.default_rng(seed)
-    mins = [int(rng.integers(0, 1 << bits)) for _ in range(ndim)]
-    maxs = [int(rng.integers(m, 1 << bits)) for m in mins]
-    pts = list(itertools.product(*[range(mn, mx + 1)
-                                   for mn, mx in zip(mins, maxs)]))
-    cols = [np.array([p[d] for p in pts], dtype=np.uint64)
-            for d in range(ndim)]
-    keys = zorder.hilbert_index(cols, bits)
-    assert zorder.hilbert_box_range(mins, maxs, bits) == \
-        (int(keys.min()), int(keys.max()))

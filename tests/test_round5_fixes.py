@@ -3,15 +3,13 @@
 1. commit_new_entries validates against concurrently-landed delete
    files (ADVICE #1 — conditional merge-on-read could resurrect
    deleted rows); the conditional-MoR unit retries and converges.
-2. Manifest-derived merge re-key boundaries (VERDICT #1): full
-   cluster jobs stamp per-file zkey ranges; merges serve boundaries
-   from them when the property list is absent/capped and report
-   rekey_boundaries="manifest".
-3. Stale cluster.boundaries* records are cleared when a full rewrite
-   completes without recording fresh ones (ADVICE #4).
-4. Recorded-layout staleness auto-repair (VERDICT #2): growth past
-   the factor → maybe_maintain re-records from manifest stats →
-   next merge is "recorded" again.
+2. Merge re-key boundaries when no boundary list is recorded (past
+   MAX_RECORDED_BOUNDARIES, or cleared): merges compute them with a
+   keys-only pass and report rekey_boundaries="computed".
+3. Stale cluster.* records are cleared when a full rewrite completes
+   without recording fresh ones (ADVICE #4).
+4. A 3-column layout grown 2× and passed through maybe_maintain keeps
+   serving the recorded list to the next re-keyed merge.
 5. Rate-limited spec migration (VERDICT #3): migrate_max_bytes caps
    each incremental run, oldest first; scans stay correct mid-way.
 6. Coupon-collector bucket-prune skip (VERDICT #6): dense sources
@@ -127,63 +125,54 @@ def test_conditional_mor_merge_does_not_resurrect_deleted_rows(
     assert len(rows) == 29
 
 
-# ------------------------------------------ 2. manifest-derived boundaries
-
-
-def test_full_cluster_stamps_zranges(spark, tmp_path):
-    t = _clustered_table(spark, str(tmp_path / "t"))
-    ents = t.files(content="data")
-    assert ents and all(e.zrange is not None for e in ents)
-    assert all(e.zrange[0] <= e.zrange[1] for e in ents)
-    # ranges must be (near-)disjoint: sorted by lo, each file's lo is at
-    # least the previous file's hi boundary (shared edges allowed — the
-    # tie-spread can land boundary-valued rows in either neighbor)
-    rs = sorted(e.zrange for e in ents)
-    for (_lo1, hi1), (lo2, _hi2) in zip(rs, rs[1:]):
-        assert lo2 >= hi1  # consecutive ranges share at most the edge
+# ------------------------------------------ 2. no recorded boundary list
 
 
 def test_merge_serves_manifest_boundaries_when_property_absent(spark, tmp_path):
+    """With the recorded list cleared (bounds kept), every re-keyed merge
+    computes its boundaries and keeps the rows exact."""
     t = _clustered_table(spark, str(tmp_path / "t"))
     m1 = merge_into(t, _upd(spark, 0, 40_000, 40, "u1"), ["k"], spark)
     assert m1["rekey_boundaries"] == "recorded"
-    # simulate the >MAX_RECORDED_BOUNDARIES regime: list absent, bounds kept
     t.set_properties({"cluster.boundaries": None})
-    m2 = merge_into(t, _upd(spark, 0, 40_000, 40, "u2"), ["k"], spark)
-    assert m2["rekey_boundaries"] == "manifest"
-    assert t.scan(spark).count() == 40_000
-    assert t.scan(spark, filters=[("s", "=", "u2")]).count() == 1000
-    # merge output re-stamped zranges → a third merge still serves manifest
-    m3 = merge_into(t, _upd(spark, 0, 40_000, 40, "u3"), ["k"], spark)
-    assert m3["rekey_boundaries"] == "manifest"
-    assert t.scan(spark, filters=[("s", "=", "u3")]).count() == 1000
+    for tag in ("u2", "u3"):
+        m = merge_into(t, _upd(spark, 0, 40_000, 40, tag), ["k"], spark)
+        assert m["rekey_boundaries"] == "computed"
+        rows = {r.k: r.s for r in t.scan(spark).collect()}
+        assert rows == {k: (tag if k % 40 == 0 else f"v{k}")
+                        for k in range(40_000)}
 
 
 def test_full_rewrite_past_cap_records_bounds_and_clears_list(
         spark, tmp_path, monkeypatch):
+    """Past the property cap a full rewrite records none of the three
+    cluster.* layout records, and merges compute their boundaries."""
     monkeypatch.setattr(clustering, "MAX_RECORDED_BOUNDARIES", 2)
     t = _clustered_table(spark, str(tmp_path / "t"))
     props = t.metadata().properties
-    assert "cluster.boundaries" not in props  # capped → list not recorded
-    assert "cluster.bounds" in props          # normalization still recorded
-    assert int(props["cluster.boundaries-rows"]) == 40_000
+    for key in ("cluster.bounds", "cluster.boundaries",
+                "cluster.boundaries-rows"):
+        assert key not in props
     m = merge_into(t, _upd(spark, 0, 40_000, 40, "u1"), ["k"], spark)
-    assert m["rekey_boundaries"] == "manifest"
+    assert m["rekey_boundaries"] == "computed"
+    assert t.scan(spark).count() == 40_000
+    assert t.scan(spark, filters=[("s", "=", "u1")]).count() == 1000
 
 
 def test_stale_boundaries_cleared_when_full_rewrite_skips_recording(
         spark, tmp_path, monkeypatch):
     """ADVICE #4: a later full rewrite that cannot record fresh
-    boundaries must delete the previous cluster.boundaries* records in
-    the same flow — merges must not re-key to the replaced layout."""
+    boundaries must delete the previous cluster.* records in the same
+    flow — merges must not re-key to the replaced layout."""
     t = _clustered_table(spark, str(tmp_path / "t"))
     assert "cluster.boundaries" in t.metadata().properties
     monkeypatch.setattr(clustering, "MAX_RECORDED_BOUNDARIES", 2)
     clustering.cluster_rewrite(t, spark, columns=("a", "b"), curve="zorder",
                                target_file_bytes=64 * 1024, mode="full")
     props = t.metadata().properties
-    assert "cluster.boundaries" not in props
-    assert "cluster.bounds" in props
+    for key in ("cluster.bounds", "cluster.boundaries",
+                "cluster.boundaries-rows"):
+        assert key not in props
 
 
 def test_cluster_config_change_clears_old_records(spark, tmp_path):
@@ -199,30 +188,51 @@ def test_cluster_config_change_clears_old_records(spark, tmp_path):
     assert rec is not None  # fresh record for the NEW config
 
 
-# ------------------------------------------ 4. staleness auto-repair
+# ------------------------------------------ 4. growth + maybe_maintain
 
 
-def test_maybe_maintain_rerecords_stale_boundaries(spark, tmp_path):
-    t = _clustered_table(spark, str(tmp_path / "t"))
-    t.set_properties({"cluster.boundaries": None})  # simulate capped record
-    t.append(spark, spark.range(40_000, 90_000).select(
-        F.col("id").alias("k"), (F.col("id") * 37 % 1000).cast("long").alias("a"),
-        (F.col("id") * 13 % 500).cast("long").alias("b"),
-        F.lit("g").alias("s")), target_file_count=4)
+def _hot_corner(spark, lo, hi, tag=None):
+    hot = F.col("id") % 5 < 3  # 60% of rows at the max (a, b, c) corner
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        F.when(hot, 999).otherwise(F.col("id") * 37 % 1000).cast("long").alias("a"),
+        F.when(hot, 499).otherwise(F.col("id") * 13 % 500).cast("long").alias("b"),
+        F.when(hot, 299).otherwise(F.col("id") * 7 % 300).cast("long").alias("c"),
+        (F.concat(F.lit("v"), F.col("id")) if tag is None
+         else F.lit(tag)).alias("s"))
+
+
+def test_maybe_maintain_after_growth_keeps_merge_rekey_valid(spark, tmp_path):
+    """A 3-column key at the max corner is 2^63-1, the top of the int64
+    key domain; boundaries interpolated in floats round it up to 2^63,
+    which no int64 routing array holds (OverflowError). Growing such a
+    table 2× and running maybe_maintain must leave the recorded list as
+    the full cluster job wrote it, and the next re-keyed merge routes
+    with it."""
+    n = 10_000
+    t = Table.create(str(tmp_path / "t"), _hot_corner(spark, 0, 1).schema,
+                     properties={"merge.cluster-rekey-min-bytes": "1"})
+    t.append(spark, _hot_corner(spark, 0, n), target_file_count=4)
+    clustering.cluster_rewrite(t, spark, columns=("a", "b", "c"),
+                               target_file_bytes=32 * 1024, mode="full")
+    recorded = dict(t.metadata().properties)
+    t.append(spark, _hot_corner(spark, n, 2 * n), target_file_count=4)
     out = maybe_maintain(t, spark, MaintenancePolicy(
         compact_after_appends=1, min_small_files=1,
-        small_file_bytes=64 * 1024 * 1024, target_file_bytes=64 * 1024))
-    assert out.get("boundaries_rerecorded"), out
-    assert int(t.metadata().properties["cluster.boundaries-rows"]) == 90_000
-    m = merge_into(t, _upd(spark, 0, 90_000, 90, "u1"), ["k"], spark)
+        small_file_bytes=64 * 1024 * 1024, target_file_bytes=32 * 1024))
+    assert out["clustered"], out
+    props = t.metadata().properties
+    for key in ("cluster.bounds", "cluster.boundaries",
+                "cluster.boundaries-rows"):
+        assert props.get(key) == recorded.get(key)
+    assert all(int(b) < 1 << 63
+               for b in props["cluster.boundaries"].split(","))
+    m = merge_into(t, _hot_corner(spark, 0, 2 * n, "u")
+                   .filter(F.col("k") % 10 == 0), ["k"], spark)
     assert m["rekey_boundaries"] == "recorded"
-    assert t.scan(spark).count() == 90_000
-
-
-def test_maybe_maintain_no_rerecord_below_factor(spark, tmp_path):
-    t = _clustered_table(spark, str(tmp_path / "t"))
-    out = maybe_maintain(t, spark, MaintenancePolicy(compact_after_appends=99))
-    assert "boundaries_rerecorded" not in out
+    rows = {r.k: r.s for r in t.scan(spark).collect()}
+    assert rows == {k: ("u" if k % 10 == 0 else f"v{k}")
+                    for k in range(2 * n)}
 
 
 # ------------------------------------------ 5. rate-limited spec migration
@@ -418,38 +428,7 @@ def test_changes_delete_before_images(spark, tmp_path):
                for e in kept if "k" in e.stats)
 
 
-# ------------------------------------------ 10. hilbert merge key span
-
-
-def test_merge_key_span_bounds_hilbert():
-    """Hilbert layouts now get the span restriction too (round-4 TODO):
-    the source value box is covered exactly by hilbert_box_range, and
-    every in-box point key falls inside the returned span."""
-    from types import SimpleNamespace
-
-    from medalforge_lakehouse_data_spark.maintenance.clustering import (
-        box_curve_key_range,
-        point_curve_key,
-    )
-    from medalforge_lakehouse_data_spark.operators.merge import _merge_key_span
-
-    cl_cols = ["a", "b"]
-    rec_bounds = {"a": (0, 1000), "b": (0, 500)}
-    affected = [SimpleNamespace(zrange=[100, 200])]
-    sb = {"mn_a": 10, "mx_a": 60, "mn_b": 5, "mx_b": 40,
-          "nn_a": 0, "nn_b": 0}
-    span = _merge_key_span(affected, sb, cl_cols, rec_bounds, "hilbert",
-                           box_curve_key_range)
-    assert span is not None
-    lo, hi = span
-    assert lo <= 100 and hi >= 200  # affected zrange folded in
-    for a in range(10, 61, 10):
-        for b in range(5, 41, 7):
-            k = point_curve_key([a, b], cl_cols, rec_bounds, "hilbert")
-            assert lo <= k <= hi, (a, b, k, span)
-    # untagged affected file still disables the span
-    assert _merge_key_span([SimpleNamespace(zrange=None)], sb, cl_cols,
-                           rec_bounds, "hilbert", box_curve_key_range) is None
+# ------------------------------------------ 10. hilbert merge, computed boundaries
 
 
 def test_hilbert_manifest_merge_correct(spark, tmp_path):
@@ -465,45 +444,9 @@ def test_hilbert_manifest_merge_correct(spark, tmp_path):
     clustering.cluster_rewrite(t, spark, columns=("a", "b"),
                                curve="hilbert", target_file_bytes=64 * 1024,
                                mode="full")
-    t.set_properties({"cluster.boundaries": None})  # force manifest path
+    t.set_properties({"cluster.boundaries": None})  # no recorded list
     m = merge_into(t, _upd(spark, 0, 10_000, 25, "u1"), ["k"], spark)
-    assert m["rekey_boundaries"] == "manifest"
-    assert t.scan(spark).count() == 10_000
-    assert t.scan(spark, filters=[("s", "=", "u1")]).count() == 400
-    rows = {r.k: r.s for r in t.scan(
-        spark, filters=[("k", "between", (0, 100))]).collect()}
-    assert rows[25] == "u1" and rows[26] == "v26"
-
-
-# ------------------------------------------ 11. layout-boundary cache
-
-
-def test_manifest_boundaries_cached_per_snapshot(spark, tmp_path,
-                                                 monkeypatch):
-    t = _clustered_table(spark, str(tmp_path / "t"), n=10_000)
-    calls = {"n": 0}
-    real_files = Table.files
-
-    def counting_files(self, *a, **kw):
-        calls["n"] += 1
-        return real_files(self, *a, **kw)
-
-    monkeypatch.setattr(Table, "files", counting_files)
-    b1 = clustering.manifest_layout_boundaries(t, ("a", "b"), "zorder",
-                                               64 * 1024)
-    walked = calls["n"]
-    assert b1 is not None and walked > 0
-    # same snapshot, any span → served from cache, no manifest walk
-    b2 = clustering.manifest_layout_boundaries(t, ("a", "b"), "zorder",
-                                               64 * 1024,
-                                               span=(b1[0], b1[-1]))
-    assert calls["n"] == walked
-    assert b2 == [b for b in b1 if b1[0] <= b <= b1[-1]]
-    # cached copy is isolated from caller mutation
-    b1.append(-1)
-    assert clustering.manifest_layout_boundaries(
-        t, ("a", "b"), "zorder", 64 * 1024)[-1] != -1
-    # a commit (new snapshot) invalidates the key → fresh walk
-    t.append(spark, _upd(spark, 100_000, 100_010, 1, "x"))
-    clustering.manifest_layout_boundaries(t, ("a", "b"), "zorder", 64 * 1024)
-    assert calls["n"] > walked
+    assert m["rekey_boundaries"] == "computed"
+    rows = {r.k: r.s for r in t.scan(spark).collect()}
+    assert rows == {k: ("u1" if k % 25 == 0 else f"v{k}")
+                    for k in range(10_000)}

@@ -3,11 +3,9 @@
 1. changes() reads CoW-removed files with the PARENT snapshot's deletes
    applied — a row masked by an earlier MoR delete must not surface as a
    spurious 'delete' event when its old file is rewritten (ADVICE #1).
-2. _stamp_zranges clamps edge files to the curve-key domain (or the
-   merge's proven key span), never ±2^63 sentinels (ADVICE #2).
-3. The coupon-collector bucket-prune skip is sized on DISTINCT keys,
+2. The coupon-collector bucket-prune skip is sized on DISTINCT keys,
    not source rows (ADVICE #3).
-4. Empty-target insert merges take the append fast path with identical
+3. Empty-target insert merges take the append fast path with identical
    results and idempotency.
 """
 
@@ -16,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from medalforge_lakehouse_data_spark.format.table import Table
-from medalforge_lakehouse_data_spark.maintenance import clustering
 from medalforge_lakehouse_data_spark.operators.merge import merge_into
 
 SIMPLE = StructType([
@@ -52,27 +49,6 @@ def test_changes_cow_rewrite_applies_parent_deletes(spark, tmp_path):
     # key 5's live row (the sid-3 append) is untouched by the window
     live = {(r.k, r.val) for r in t.scan(spark).collect()}
     assert (5, "new5") in live
-
-
-def test_zrange_edge_stamps_clamped_to_domain(spark, tmp_path):
-    schema = StructType([
-        StructField("a", LongType()),
-        StructField("b", LongType()),
-        StructField("val", StringType()),
-    ])
-    t = Table.create(str(tmp_path / "t"), schema)
-    rows = [(i * 37 % 1000, i * 91 % 1000, f"v{i}") for i in range(2000)]
-    t.append(spark, spark.createDataFrame(rows, schema), target_file_count=4)
-    m = clustering.cluster_rewrite(
-        t, spark, columns=("a", "b"), curve="zorder",
-        target_file_bytes=4 * 1024, mode="full")
-    assert m["files_out"] > 1
-    lo_d, hi_d = clustering.curve_key_domain(2)
-    assert (lo_d, hi_d) == (0, (1 << 62) - 1)
-    stamped = [e for e in t.files(content="data") if e.zrange is not None]
-    assert stamped, "full cluster rewrite must stamp zranges"
-    for e in stamped:
-        assert lo_d <= e.zrange[0] <= e.zrange[1] <= hi_d, e.zrange
 
 
 def test_bucket_prune_uses_distinct_keys(spark, tmp_path):

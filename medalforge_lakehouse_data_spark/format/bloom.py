@@ -12,14 +12,14 @@ Design:
   * 64-bit value hashes: splitmix64 over int64 columns (vectorized
     numpy), crc32 hi/lo over stringified values otherwise.
   * Blooms live in manifest JSON (base64). That is the right place for
-    bounded file sizes; it is size-capped (``max_bytes``) because a
-    10^6-row file at 16 bits/key would bloat manifests to MBs — such
-    files simply skip the bloom and fall back to range pruning.
+    bounded file sizes; it is size-capped (``stats.BLOOM_MAX_BYTES``,
+    128 KiB) because a 10^6-row file at 16 bits/key would bloat
+    manifests to MBs — such files simply skip the bloom and fall back to
+    range pruning.
 
-Enable per table with properties:
-    bloom.columns = "image_id"          (comma list)
-    bloom.bits-per-key = "16"           (fpp ≈ 0.6185^bits ≈ 5e-4)
-    bloom.max-bytes-per-file = "131072"
+Enable per table with the property ``bloom.columns = "image_id"``
+(comma list); every bloom uses ``stats.BLOOM_BITS_PER_KEY`` = 16 bits
+per key (fpp ≈ 0.6185^bits ≈ 5e-4).
 """
 
 from __future__ import annotations

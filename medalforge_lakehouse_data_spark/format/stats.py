@@ -22,6 +22,10 @@ from medalforge_lakehouse_data_spark.format.metadata import ColumnStats, DataFil
 
 # Columns where min/max is useless or expensive to keep (opaque payloads).
 _SKIP_PHYSICAL = {"BYTE_ARRAY"}  # only when logical type is not string
+# Key blooms (bloom.columns): 16 bits per key (fpp ~5e-4); a file whose
+# bloom would exceed 128 KiB keeps none and falls back to range pruning.
+BLOOM_BITS_PER_KEY = 16
+BLOOM_MAX_BYTES = 131_072
 
 
 def _merge_minmax(cur: ColumnStats, mn: Any, mx: Any, nulls: int | None) -> None:
@@ -69,18 +73,13 @@ def file_stats(abs_path: str, stat_columns: list[str] | None = None) -> tuple[in
     return md.num_rows, os.path.getsize(abs_path), stats
 
 
-def file_blooms(
-    abs_path: str,
-    bloom_columns: list[str],
-    bits_per_key: int = 16,
-    max_bytes: int = 131_072,
-) -> dict[str, dict]:
+def file_blooms(abs_path: str, bloom_columns: list[str]) -> dict[str, dict]:
     """Per-column key bloom filters for one file (format/bloom.py).
 
     Unlike footer stats this reads the column DATA (columnar, only the
-    requested columns). Files whose bloom would exceed ``max_bytes``
-    skip it — manifests must stay small; those files fall back to
-    range pruning."""
+    requested columns). Files whose bloom would exceed
+    ``BLOOM_MAX_BYTES`` skip it — manifests must stay small; those files
+    fall back to range pruning."""
     from medalforge_lakehouse_data_spark.format.bloom import Bloom
 
     pf = pq.ParquetFile(abs_path)
@@ -91,7 +90,7 @@ def file_blooms(
         if col not in present:
             continue
         n = pf.metadata.num_rows
-        if (n * bits_per_key) // 8 > max_bytes:
+        if (n * BLOOM_BITS_PER_KEY) // 8 > BLOOM_MAX_BYTES:
             continue
         # Drop nulls on the ARROW side: a null-bearing int64 column round-
         # tripped through pandas becomes float64, so every value would hash
@@ -101,18 +100,14 @@ def file_blooms(
         col_arr = pf.read(columns=[col]).column(col).combine_chunks().drop_null()
         values = col_arr.to_pandas().to_numpy()
         if len(values):
-            out[col] = Bloom.build(values, bits_per_key).to_json()
+            out[col] = Bloom.build(values, BLOOM_BITS_PER_KEY).to_json()
     return out
 
 
-def _one_entry(root, rel, stat_columns, partition, bloom_columns, bloom_bits,
-               bloom_max_bytes) -> DataFile:
+def _one_entry(root, rel, stat_columns, partition, bloom_columns) -> DataFile:
     abs_path = os.path.join(root, rel)
     rows, nbytes, stats = file_stats(abs_path, stat_columns)
-    blooms = (
-        file_blooms(abs_path, bloom_columns, bloom_bits, bloom_max_bytes)
-        if bloom_columns else {}
-    )
+    blooms = file_blooms(abs_path, bloom_columns) if bloom_columns else {}
     return DataFile(path=rel, rows=rows, bytes=nbytes,
                     partition=partition, stats=stats, blooms=blooms)
 
@@ -123,8 +118,6 @@ def collect_entries(
     partitions: dict[str, dict[str, Any]] | None = None,
     stat_columns: list[str] | None = None,
     bloom_columns: list[str] | None = None,
-    bloom_bits_per_key: int = 16,
-    bloom_max_bytes: int = 131_072,
 ) -> list[DataFile]:
     """Build DataFile entries (footer stats + optional key blooms) for
     table-relative paths.
@@ -136,8 +129,7 @@ def collect_entries(
     with ThreadPoolExecutor(max_workers=min(32, max(4, len(rel_paths)))) as ex:
         futs = [
             ex.submit(_one_entry, root, rel, stat_columns,
-                      partitions.get(rel, {}), bloom_columns,
-                      bloom_bits_per_key, bloom_max_bytes)
+                      partitions.get(rel, {}), bloom_columns)
             for rel in rel_paths
         ]
         return [f.result() for f in futs]

@@ -921,14 +921,10 @@ class Table:
                 partitions[rel] = pvals
         shutil.rmtree(staging, ignore_errors=True)
         stat_cols = self._stat_columns(schema)
-        props = meta.properties
-        bloom_cols = [c.strip() for c in props.get("bloom.columns", "").split(",") if c.strip()]
-        entries = collect_entries(
-            self.root, rels, partitions, stat_cols,
-            bloom_columns=bloom_cols,
-            bloom_bits_per_key=int(props.get("bloom.bits-per-key", 16)),
-            bloom_max_bytes=int(props.get("bloom.max-bytes-per-file", 131_072)),
-        )
+        bloom_cols = [c.strip() for c in
+                      meta.properties.get("bloom.columns", "").split(",") if c.strip()]
+        entries = collect_entries(self.root, rels, partitions, stat_cols,
+                                  bloom_columns=bloom_cols)
         sv = meta.current_schema_version
         for e in entries:
             e.schema_version = sv

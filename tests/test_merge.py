@@ -53,22 +53,6 @@ def test_merge_delete(spark, simple_table):
     assert len(ks) == 98
 
 
-def test_merge_delete_with_insert(spark, simple_table):
-    t = simple_table
-    src = spark.createDataFrame([(1, "x"), (999, "ins")], SIMPLE)
-    merge_into(t, src, ["k"], spark, when_matched="delete", when_not_matched="insert")
-    rows = {r.k: r.val for r in t.scan(spark).collect()}
-    assert 1 not in rows and rows[999] == "ins" and len(rows) == 100
-
-
-def test_merge_insert_only(spark, simple_table):
-    t = simple_table
-    src = spark.createDataFrame([(5, "SHOULD_NOT_APPLY"), (777, "ins")], SIMPLE)
-    merge_into(t, src, ["k"], spark, when_matched=None, when_not_matched="insert")
-    rows = {r.k: r.val for r in t.scan(spark).collect()}
-    assert rows[5] == "old_5" and rows[777] == "ins" and len(rows) == 101
-
-
 def test_merge_duplicate_source_keys_rejected(spark, simple_table):
     src = spark.createDataFrame([(1, "a"), (1, "b")], SIMPLE)
     with pytest.raises(ValueError, match="duplicate merge keys"):

@@ -65,24 +65,6 @@ def test_mor_delete(spark, table):
     assert 1 not in ks and 2 not in ks and len(ks) == 98
 
 
-def test_mor_delete_with_insert(spark, table):
-    t = table
-    src = spark.createDataFrame([(1, "x"), (999, "ins")], SIMPLE)
-    merge_into(t, src, ["k"], spark, when_matched="delete",
-               when_not_matched="insert", strategy="merge-on-read")
-    rows = {r.k: r.val for r in t.scan(spark).collect()}
-    assert 1 not in rows and rows[999] == "ins" and len(rows) == 100
-
-
-def test_mor_update_without_insert(spark, table):
-    t = table
-    src = spark.createDataFrame([(5, "upd_5"), (500, "skip_500")], SIMPLE)
-    merge_into(t, src, ["k"], spark, when_not_matched=None,
-               strategy="merge-on-read")
-    rows = {r.k: r.val for r in t.scan(spark).collect()}
-    assert rows[5] == "upd_5" and 500 not in rows and len(rows) == 100
-
-
 def test_mor_snapshot_isolation(spark, table):
     t = table
     pre = t.current_snapshot_id()

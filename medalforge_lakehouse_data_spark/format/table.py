@@ -35,6 +35,8 @@ import uuid
 from functools import reduce
 from typing import Any, Callable, Iterable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -66,6 +68,11 @@ from medalforge_lakehouse_data_spark.format.stats import collect_entries
 
 _LAYOUT_PREFIX = "__p_"
 _NULL_PART = "__HIVE_DEFAULT_PARTITION__"
+# characters Spark escapes as %XX in partition directory names
+# (ExternalCatalogUtils.escapePathName); everything else, non-ASCII
+# included, is kept verbatim
+_PATH_ESCAPES = frozenset([*map(chr, range(1, 32)), '"', "#", "%", "'", "*", "/",
+                           ":", "=", "?", "\\", "\x7f", "{", "[", "]", "^"])
 
 Filter = tuple  # (col, op, value) with op in {=, <, <=, >, >=, in, between}
 
@@ -160,6 +167,101 @@ def partition_field_expr(entry: str, schema: StructType | None = None):
         # — F.pmod is already the non-negative modulus
         return name, (F.col(col) - F.pmod(F.col(col), F.lit(n))).cast("long")
     return name, F.col(col)
+
+
+def layout_columns(meta: TableMetadata, as_string: bool = False) -> dict:
+    """``{"__p_<field>": Column}`` for the partition spec of ``meta``, one
+    ``partition_field_expr`` each: the layout columns Spark's writer
+    partitions by. ``as_string`` gives their Spark string form
+    (``cast(string)``, in the session time zone), the text that writer
+    puts in directory names."""
+    out = {}
+    for p in meta.partition_spec:
+        name, expr = partition_field_expr(p, meta.schema)
+        out[_LAYOUT_PREFIX + name] = expr.cast("string") if as_string else expr
+    return out
+
+
+def _layout_dir(col: str, value: str | None) -> str:
+    """The directory Spark's partitioned writer names for a layout column
+    whose string form is ``value``: NULL and '' become the default
+    partition, other values are escaped as ``escapePathName`` does."""
+    if value is None or value == "":
+        return f"{col}={_NULL_PART}"
+    return col + "=" + "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c
+                               for c in value)
+
+
+def _write_parquet(rows: pa.Table, path: str, stat_cols: list[str]) -> None:
+    """One driver-written parquet file: snappy, timestamps as INT64
+    microseconds, footer min/max only for the ``stat_cols`` whose
+    Spark-written twin has bounds the footer reader decodes. Spark writes
+    zoned timestamps as INT96 and decimals of precision <= 18 as INT32/
+    INT64, and neither yields bounds, so those columns get none here
+    either: manifests hold the same bounds whichever side wrote a file."""
+    stats = [c for c in stat_cols if c in rows.column_names
+             and not _spark_drops_bounds(rows.schema.field(c).type)]
+    pq.write_table(rows, path, compression="snappy", write_statistics=stats,
+                   coerce_timestamps="us", store_schema=False)
+
+
+def _spark_drops_bounds(t: pa.DataType) -> bool:
+    return ((pa.types.is_timestamp(t) and t.tz is not None)
+            or (pa.types.is_decimal(t) and t.precision <= 18))
+
+
+def _write_arrow_layout(rows: pa.Table, staging: str, columns: list[str],
+                        layout: list[str], stat_cols: list[str]) -> None:
+    """The driver twin of Spark's partitioned write: ``columns`` of
+    ``rows`` as one file per layout directory, in source order, under the
+    directories Spark names for the ``layout`` (string-form) columns. NULL
+    and '' share a directory and so a file, as Spark's writer maps '' to
+    NULL before it partitions."""
+    groups: dict[str, list[int]] = {}
+    dirs = zip(*[[_layout_dir(c, v) for v in rows.column(c).to_pylist()]
+                 for c in layout]) if layout else [()] * rows.num_rows
+    for i, d in enumerate(dirs):
+        groups.setdefault(os.path.join(staging, *d), []).append(i)
+    data = rows.select(columns)
+    for d, idx in groups.items():
+        os.makedirs(d, exist_ok=True)
+        _write_parquet(data.take(idx), os.path.join(
+            d, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"), stat_cols)
+
+
+def _write_spark_layout(df: DataFrame, staging: str, columns: list[str],
+                        layout: dict, target_file_count, sort_within,
+                        shuffle_col) -> None:
+    """Spark's partitioned parquet write of ``df``'s ``columns`` into
+    ``staging``, partitioned by the ``layout`` columns (the DataFrame
+    branch of ``Table._write_data_files``)."""
+    writer_df = df
+    for name, expr in layout.items():
+        writer_df = writer_df.withColumn(name, expr)
+    if target_file_count:
+        if shuffle_col is not None:
+            writer_df = writer_df.repartition(
+                target_file_count, F.col(shuffle_col)
+            )
+            if sort_within:
+                writer_df = writer_df.sortWithinPartitions(*sort_within)
+        elif sort_within:
+            # Range-partition + sort on the cluster key: each output file
+            # gets a disjoint key range → tight per-file min/max bounds.
+            writer_df = writer_df.repartitionByRange(
+                target_file_count, *[F.col(c) for c in sort_within]
+            ).sortWithinPartitions(*sort_within)
+        else:
+            writer_df = writer_df.repartition(target_file_count)
+    elif sort_within:
+        writer_df = writer_df.sortWithinPartitions(*sort_within)
+    # Project AFTER repartition/sort so transient sort keys (e.g. a
+    # space-filling-curve index not in the schema) order the rows but
+    # are not written; narrow projection preserves within-partition order.
+    writer = writer_df.select(*columns, *layout).write.mode("overwrite")
+    if layout:
+        writer = writer.partitionBy(*layout)
+    writer.parquet(staging)
 
 
 def _field_id(f) -> int | None:
@@ -818,7 +920,7 @@ class Table:
     def _write_data_files(
         self,
         spark: SparkSession,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         target_file_count: int | None = None,
         sort_within: list[str] | None = None,
         shuffle_col: str | None = None,
@@ -829,6 +931,14 @@ class Table:
         originals stay in the files. Returns manifest entries with footer
         stats. Files land with unique names; a crashed job leaves only
         unreferenced orphans (GC'd by snapshot expiry), never a torn table.
+
+        ``df`` may also be an Arrow table already on the driver, holding
+        the schema's columns plus ``layout_columns(meta, as_string=True)``
+        (a small merge-on-read merge collects its source that way). The
+        driver writes it with pyarrow, one file per layout tuple under the
+        directories Spark would name, and no Spark job runs; the file
+        count and sort arguments do not apply. Either way the entries come
+        from the same directory-name parse and ``collect_entries``.
 
         ``shuffle_col``: hash-partition on this (precomputed) column instead
         of range-partitioning on ``sort_within``. Callers that already
@@ -842,41 +952,14 @@ class Table:
         spec = meta.partition_spec
         schema = meta.schema
         staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
-        pfields = [partition_field_expr(p, schema) for p in spec]
-        pnames = [name for name, _ in pfields]
-        writer_df = df
-        for name, expr in pfields:
-            writer_df = writer_df.withColumn(_LAYOUT_PREFIX + name, expr)
-        if target_file_count:
-            if shuffle_col is not None:
-                writer_df = writer_df.repartition(
-                    target_file_count, F.col(shuffle_col)
-                )
-                if sort_within:
-                    writer_df = writer_df.sortWithinPartitions(*sort_within)
-            elif sort_within:
-                # Range-partition + sort on the cluster key: each output file
-                # gets a disjoint key range → tight per-file min/max bounds.
-                writer_df = writer_df.repartitionByRange(
-                    target_file_count, *[F.col(c) for c in sort_within]
-                ).sortWithinPartitions(*sort_within)
-            else:
-                writer_df = writer_df.repartition(target_file_count)
-        elif sort_within:
-            writer_df = writer_df.sortWithinPartitions(*sort_within)
-        # Project AFTER repartition/sort so transient sort keys (e.g. a
-        # space-filling-curve index not in the schema) order the rows but
-        # are not written; narrow projection preserves within-partition order.
-        writer_df = writer_df.select(
-            *schema.fieldNames(), *[_LAYOUT_PREFIX + n for n in pnames]
-        )
-        if spec:
-            writer = writer_df.write.mode("overwrite").partitionBy(
-                *[_LAYOUT_PREFIX + n for n in pnames]
-            )
+        stat_cols = self._stat_columns(schema)
+        layout = layout_columns(meta)
+        if isinstance(df, pa.Table):
+            _write_arrow_layout(df, staging, schema.fieldNames(), list(layout),
+                                stat_cols)
         else:
-            writer = writer_df.write.mode("overwrite")
-        writer.parquet(staging)
+            _write_spark_layout(df, staging, schema.fieldNames(), layout,
+                                target_file_count, sort_within, shuffle_col)
 
         # Move part files into data/, preserving layout dirs; parse partition
         # values from the layout dir names for manifest entries.
@@ -920,7 +1003,6 @@ class Table:
                 rels.append(rel)
                 partitions[rel] = pvals
         shutil.rmtree(staging, ignore_errors=True)
-        stat_cols = self._stat_columns(schema)
         bloom_cols = [c.strip() for c in
                       meta.properties.get("bloom.columns", "").split(",") if c.strip()]
         entries = collect_entries(self.root, rels, partitions, stat_cols,
@@ -1564,13 +1646,21 @@ class Table:
             parts.append(df)
         return reduce(DataFrame.unionByName, parts)
 
-    def _write_delete_files(self, spark: SparkSession, keys_df: DataFrame,
+    def _write_delete_files(self, spark: SparkSession, keys_df: DataFrame | pa.Table,
                             key_cols: list[str], n_files: int = 1) -> list[DataFile]:
         """Write equality-delete files (rows = key values to delete) and
         return their manifest entries (content='deletes', seq stamped at
-        commit). Small by construction — one file unless told otherwise."""
+        commit). Small by construction — one file unless told otherwise.
+        An Arrow ``keys_df`` is written by the driver as one file, with no
+        Spark job."""
         staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
-        keys_df.select(*key_cols).coalesce(n_files).write.mode("overwrite").parquet(staging)
+        if isinstance(keys_df, pa.Table):
+            os.makedirs(staging)
+            _write_parquet(keys_df.select(key_cols), os.path.join(
+                staging, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"), key_cols)
+        else:
+            keys_df.select(*key_cols).coalesce(n_files).write.mode("overwrite") \
+                .parquet(staging)
         rels = []
         for fn in os.listdir(staging):
             if not fn.endswith(".parquet"):

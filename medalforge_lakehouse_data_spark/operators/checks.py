@@ -19,6 +19,8 @@ Aliases: unique→is_unique, not_null→is_not_null, col_name→column.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
@@ -26,6 +28,11 @@ from pyspark.sql.types import StringType
 ALIASES = {"unique": "is_unique", "not_null": "is_not_null", "in_range": "is_in_range"}
 _ERR = "_errors"
 _WARN = "_warnings"
+# a string literal or backticked name (kept as is), or a call that throws
+# on bad input under ANSI and has a NULL-returning try_* twin
+_SQL_THROWING_CALL = re.compile(
+    r"""('(?:[^'\\]|\\.)*'|"(?:[^"\\]|\\.)*"|`[^`]*`)"""
+    r"""|(?<![\w.])(to_date|to_timestamp|cast)(?=\s*\()""", re.IGNORECASE)
 
 
 def normalize_check(check: dict) -> dict:
@@ -85,10 +92,22 @@ def _v_is_in_range(df, column: str, min_limit=None, max_limit=None):
     return F.when(c.isNull(), F.lit(False)).otherwise(cond)
 
 
+def _ansi_safe(expression: str) -> str:
+    """``expression`` with ``to_date``, ``to_timestamp`` and ``cast`` calls
+    rewritten to ``try_to_date``, ``try_to_timestamp`` and ``try_cast``.
+    Under ANSI the originals throw on input they cannot parse and fail
+    the job; the twins return NULL, which fails the check and quarantines
+    the row, as the non-ANSI runtime the contracts were written for does.
+    String literals and backticked names are left untouched."""
+    return _SQL_THROWING_CALL.sub(
+        lambda m: m.group(1) or "try_" + m.group(2).lower(), expression)
+
+
 def _v_sql_expression(df, expression: str, negate: bool = False):
     """Expression states the VALID condition (reference: dummy.yaml:49-56);
-    violation is its negation (nulls count as violations)."""
-    ok = F.expr(expression)
+    violation is its negation (nulls count as violations). Throwing calls
+    run as their try_* twins (``_ansi_safe``)."""
+    ok = F.expr(_ansi_safe(expression))
     if negate:
         ok = ~ok
     return ~F.coalesce(ok, F.lit(False))

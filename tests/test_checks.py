@@ -113,3 +113,16 @@ def test_image_checks_on_dirty_table(spark):
         F.min(F.col("_phash_check") == F.col("phash")).alias("ok"),
         F.min("_decodable").alias("dec")).collect()[0]
     assert v.ok and v.dec
+
+
+def test_sql_expression_throwing_calls_run_as_try_twins():
+    from medalforge_lakehouse_data_spark.operators.checks import _ansi_safe
+
+    assert _ansi_safe("to_date(d, 'yyyy-MM-dd') IS NOT NULL AND CAST (x AS INT) > 0"
+                      " AND To_Timestamp(t) < now()") == (
+        "try_to_date(d, 'yyyy-MM-dd') IS NOT NULL AND try_cast (x AS INT) > 0"
+        " AND try_to_timestamp(t) < now()")
+    # literals, backticked names, try_* calls and other functions are kept
+    kept = ("s = 'to_date(x)' AND t = \"cast(\" AND `cast(`(a) AND try_cast(b AS INT) = 1"
+            " AND try_to_date(c) IS NULL AND my_to_date(d) AND e = 'it\\'s cast('")
+    assert _ansi_safe(kept) == kept

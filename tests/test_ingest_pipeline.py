@@ -136,6 +136,19 @@ def test_bronze_validate_only_mode(spark, roots):
 
 
 def test_silver_pipeline_end_to_end(spark, roots):
+    _silver_end_to_end(spark, roots)
+
+
+def test_silver_pipeline_end_to_end_ansi(spark, roots):
+    """The same run and counts in a session with ANSI on (the default of a
+    plain Spark 4 session): the contract's ``to_date`` check quarantines
+    '3/14/2021' instead of failing the job on it."""
+    ansi = spark.newSession()
+    ansi.conf.set("spark.sql.ansi.enabled", "true")
+    _silver_end_to_end(ansi, roots)
+
+
+def _silver_end_to_end(spark, roots):
     raw_root, bronze_root, warehouse = roots
     contract_b = load_bronze_contract(BRONZE_CONTRACT)
     plan, _ = bronze_pipeline.run(spark, contract_b, raw_root, bronze_root)

@@ -11,21 +11,33 @@ Correctness contract (Iceberg-v2-style):
 
 from __future__ import annotations
 
+import datetime
+import os
 import uuid
+from decimal import Decimal
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    BinaryType,
+    DateType,
+    DecimalType,
+    DoubleType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
+    TimestampType,
 )
 
 from medalforge_lakehouse_data_spark.format.table import Table
 from medalforge_lakehouse_data_spark.maintenance import compaction
+from medalforge_lakehouse_data_spark.operators import merge
 from medalforge_lakehouse_data_spark.operators.merge import merge_into
+from medalforge_lakehouse_data_spark.testing.datagen import IMAGES_SCHEMA, generate_batch
 
 SIMPLE = StructType([
     StructField("k", LongType()),
@@ -367,3 +379,154 @@ def test_mor_narrow_delete_keys_read_as_table_type(session, tmp_path, widen):
     events = t.changes(spark, 0).filter("_change_type = 'delete'").collect()
     assert {(r.k, r.val, r._commit_snapshot_id) for r in events} == {
         (3, None, upsert), (30, None, upsert), (7, None, delete)}
+
+
+# every column type a data file holds, partitioned by every transform;
+# identity values that Spark escapes, NULL and '' (one directory)
+PARITY = StructType([
+    StructField("k", LongType()), StructField("i", IntegerType()),
+    StructField("d", DoubleType()), StructField("dec", DecimalType(10, 2)),
+    StructField("dt", DateType()), StructField("ts", TimestampType()),
+    StructField("tn", TimestampNTZType()), StructField("b", BinaryType()),
+    StructField("s", StringType()), StructField("t", StringType()),
+])
+PARITY_SPEC = ["s", "bucket(k, 4)", "days(dt)", "days(ts)", "truncate(t, 2)",
+               "truncate(i, 10)"]
+_IDENTITY = ["", None, "a b", "a/b", "x=y", "%"]
+DRIVER_MERGE_ROWS = merge.DRIVER_MERGE_ROWS
+
+
+def _parity_rows(tag: str, n: int = 12) -> list[tuple]:
+    return [(k, None if k == 3 else k * 7 - 20, k / 3 if k % 5 else None,
+             Decimal(k * 125) / 100, datetime.date(2021, 1, 1 + k % 3),
+             datetime.datetime(2021, 1, 1, k, 30, 15, 250_000 * (k % 4)),
+             datetime.datetime(1999, 12, 31, 23, k, 0, 1000 * k),
+             None if k == 4 else bytes([k, 0, 255]), _IDENTITY[k % len(_IDENTITY)],
+             f"{tag}{k % 3}-{k}") for k in range(n)]
+
+
+def _file_view(e) -> tuple:
+    """A manifest entry as the writer decided it: directory, rows,
+    partition values, stat-column bounds and bloom bits."""
+    bounds = {c: (st.min, st.max) for c, st in e.stats.items()
+              if (st.min, st.max) != (None, None)}
+    return (os.path.dirname(e.path), e.rows, sorted(e.partition.items()), bounds,
+            e.blooms)
+
+
+def _rows(df) -> set:
+    return {tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+            for r in df.collect()}
+
+
+def test_driver_write_matches_spark_write(session, tmp_path, monkeypatch):
+    """The same rows written through the Arrow and the Spark branch of
+    ``_write_data_files``/``_write_delete_files`` give the same files:
+    directories, per-file rows, partition values, stat bounds, blooms and
+    scan rows; the Arrow branch runs no Spark job. A merge-on-read upsert
+    on either path then gives the same ``changes()``."""
+    spark = session
+    src = spark.createDataFrame(_parity_rows("v"), PARITY)
+    upd = spark.createDataFrame(_parity_rows("w", 16)[6:], PARITY)
+    views, scans, changes = {}, {}, {}
+    for side in ("spark", "driver"):
+        monkeypatch.setattr(merge, "DRIVER_MERGE_ROWS",
+                            0 if side == "spark" else DRIVER_MERGE_ROWS)
+        t = Table.create(str(tmp_path / side), PARITY, partition_spec=PARITY_SPEC,
+                         properties={"bloom.columns": "k"})
+        if side == "driver":
+            rows = merge._collect_local(t, src, ["k"], upsert=True)
+            added, jobs = _jobs_while(spark, lambda: (
+                t._write_data_files(spark, rows, target_file_count=1)
+                + t._write_delete_files(spark, rows, ["k", "s"])))
+            assert jobs == []
+        else:
+            added = (t._write_data_files(spark, src, target_file_count=1)
+                     + t._write_delete_files(spark, src, ["k", "s"]))
+        views[side] = sorted((e.content, _file_view(e)) for e in added)
+        t.commit_new_entries(added)
+        scans[side] = _rows(t.scan(spark))
+        before = t.current_snapshot_id()
+        merge_into(t, upd, ["k"], spark, strategy="merge-on-read")
+        changes[side] = _rows(t.changes(spark, before).drop("_commit_snapshot_id"))
+    assert views["driver"] == views["spark"]
+    assert scans["driver"] == scans["spark"] and len(scans["spark"]) == 12
+    assert changes["driver"] == changes["spark"]
+    assert len(changes["spark"]) == 2 * 10
+
+
+def _images(ids, caption: str = ""):
+    pdf = generate_batch(np.asarray(ids, dtype=np.int64), seed=5, n_bases=8)
+    pdf["caption"] = caption + pdf["caption"]
+    return pdf
+
+
+def _image_table(spark, root) -> Table:
+    t = Table.create(root, IMAGES_SCHEMA, partition_spec=["fmt", "bucket(image_id, 8)"],
+                     properties={"bloom.columns": "image_id"})
+    t.append(spark, spark.createDataFrame(_images(range(40)), IMAGES_SCHEMA))
+    return t
+
+
+def test_small_mor_merges_run_one_spark_job(session, tmp_path, monkeypatch):
+    """A 12-key merge-on-read upsert and a delete on a bucketed, bloomed
+    image table each run ONE Spark job (the source collect). Forced onto
+    the Spark path (crossover 0) the same merges give the same rows; both
+    paths raise the same duplicate-key error and no-op an empty source."""
+    spark = session
+    upsert = spark.createDataFrame(_images(range(32, 44), "u "), IMAGES_SCHEMA)
+    delete = spark.createDataFrame(_images([1, 5, 9, 40]), IMAGES_SCHEMA)
+    dups = spark.createDataFrame(_images([3, 3, 50]), IMAGES_SCHEMA)
+    empty = spark.createDataFrame([], IMAGES_SCHEMA)
+    scans, errors = {}, {}
+    for side in ("driver", "spark"):
+        monkeypatch.setattr(merge, "DRIVER_MERGE_ROWS",
+                            DRIVER_MERGE_ROWS if side == "driver" else 0)
+        t = _image_table(spark, str(tmp_path / side))
+        jobs = [_jobs_while(spark, lambda: merge_into(
+                    t, upsert, ["image_id"], spark, strategy="merge-on-read"))[1],
+                _jobs_while(spark, lambda: merge_into(
+                    t, delete, ["image_id"], spark, when_matched="delete",
+                    when_not_matched=None, strategy="merge-on-read"))[1]]
+        if side == "driver":
+            assert [len(j) for j in jobs] == [1, 1]
+        else:
+            assert all(len(j) > 1 for j in jobs)
+        scans[side] = _rows(t.scan(spark))
+        with pytest.raises(ValueError) as err:
+            merge_into(t, dups, ["image_id"], spark, strategy="merge-on-read")
+        errors[side] = str(err.value)
+        res = merge_into(t, empty, ["image_id"], spark, strategy="merge-on-read")
+        assert res == {"snapshot_id": t.current_snapshot_id(), "noop": True}
+    assert scans["driver"] == scans["spark"]
+    assert {r[0] for r in scans["spark"]} == {
+        f"img_{i:012d}" for i in range(44) if i not in (1, 5, 9, 40)}
+    assert errors["driver"] == errors["spark"] == (
+        "duplicate merge keys in source, e.g. ('img_000000000003',)")
+
+
+def test_spark_path_skips_delete_key_distinct_for_unique_keys(spark, table, monkeypatch):
+    """On the Spark path an unconditional merge-on-read merge of a
+    unique-key source writes its keys without a distinct (no aggregate,
+    no shuffle); duplicate keys allowed by check_unique_keys=False are
+    still de-duplicated."""
+    monkeypatch.setattr(merge, "DRIVER_MERGE_ROWS", 0)
+    plans = []
+    write = Table._write_delete_files
+
+    def spy(self, spark, keys_df, key_cols, n_files=1):
+        plans.append(keys_df._jdf.queryExecution().executedPlan().toString())
+        return write(self, spark, keys_df, key_cols, n_files)
+
+    monkeypatch.setattr(Table, "_write_delete_files", spy)
+    t = table
+    merge_into(t, spark.createDataFrame([(5, "n5"), (150, "n150")], SIMPLE), ["k"],
+               spark, strategy="merge-on-read")
+    merge_into(t, spark.createDataFrame([(6, "a"), (6, "b")], SIMPLE), ["k"], spark,
+               when_matched="delete", when_not_matched=None, check_unique_keys=False,
+               strategy="merge-on-read")
+    assert not any(op in plans[0] for op in ("HashAggregate", "Exchange"))
+    assert "HashAggregate" in plans[1]
+    rows = {r.k: r.val for r in t.scan(spark).collect()}
+    assert len(rows) == 100 and rows[5] == "n5" and rows[150] == "n150" and 6 not in rows
+    assert [d.rows for d in t.delete_files()] == [2, 1]

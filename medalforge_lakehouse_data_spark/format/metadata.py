@@ -277,6 +277,48 @@ class TableMetadata:
         )
 
 
+@dataclass(frozen=True)
+class ClusterLayout:
+    """The clustering ``cluster_rewrite`` recorded in the table's
+    ``cluster.*`` properties. After a full rewrite it also holds that
+    rewrite's boundary record: the normalization ``bounds`` the curve
+    keys were computed with, the range ``boundaries`` the files were cut
+    at, and the table ``rows`` at record time."""
+
+    curve: str
+    columns: tuple[str, ...]
+    target_file_bytes: int | None
+    bounds: dict | None = None
+    boundaries: list[int] | None = None
+    rows: int = 0
+
+
+def cluster_layout(properties: dict) -> ClusterLayout | None:
+    """The one reader of the ``cluster.*`` properties: None for a table
+    never clustered. A boundary record with a part missing or not
+    parseable, or whose bounds lack a layout column, is left out."""
+    columns = tuple(c.strip() for c in properties.get("cluster.columns", "").split(",")
+                    if c.strip())
+    if not columns:
+        return None
+    target = properties.get("cluster.target-file-bytes")
+    layout = ClusterLayout(properties.get("cluster.curve", "zorder"), columns,
+                           int(target) if target else None)
+    raw_bounds, raw = properties.get("cluster.bounds"), properties.get("cluster.boundaries")
+    if not raw_bounds or not raw:
+        return layout
+    try:
+        bounds = {c: tuple(v) for c, v in json.loads(raw_bounds).items()}
+        boundaries = [int(x) for x in raw.split(",") if x]
+        rows = int(properties.get("cluster.boundaries-rows", "0"))
+    except (ValueError, AttributeError, TypeError):
+        return layout
+    if any(c not in bounds for c in columns):
+        return layout
+    return ClusterLayout(layout.curve, columns, layout.target_file_bytes,
+                         bounds, boundaries, rows)
+
+
 # ---------------------------------------------------------------------------
 # Filesystem helpers — atomic single-writer commit protocol
 

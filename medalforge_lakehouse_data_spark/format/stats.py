@@ -20,8 +20,6 @@ import pyarrow.parquet as pq
 
 from medalforge_lakehouse_data_spark.format.metadata import ColumnStats, DataFile
 
-# Columns where min/max is useless or expensive to keep (opaque payloads).
-_SKIP_PHYSICAL = {"BYTE_ARRAY"}  # only when logical type is not string
 # Key blooms (bloom.columns): 16 bits per key (fpp ~5e-4); a file whose
 # bloom would exceed 128 KiB keeps none and falls back to range pruning.
 BLOOM_BITS_PER_KEY = 16

@@ -58,6 +58,7 @@ from medalforge_lakehouse_data_spark.format.metadata import (
     DataFile,
     Snapshot,
     TableMetadata,
+    cluster_layout,
     read_json,
     read_manifest,
     write_json_atomic,
@@ -795,13 +796,11 @@ class Table:
                     raise ValueError(
                         f"column {name!r} is referenced by partition field "
                         f"{p!r}; update_partition_spec first")
-            ccols = [c.strip() for c in
-                     meta.properties.get("cluster.columns", "").split(",")
-                     if c.strip()]
-            if name in ccols:
+            layout = cluster_layout(meta.properties)
+            if layout is not None and name in layout.columns:
                 raise ValueError(
                     f"column {name!r} is a recorded cluster column "
-                    f"({meta.properties.get('cluster.columns')!r}); "
+                    f"({','.join(layout.columns)!r}); "
                     f"re-cluster on other columns (or unset the cluster.* "
                     f"properties) first")
             return [f for f in fields if f.name != name]

@@ -26,6 +26,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from medalforge_lakehouse_data_spark.format.metadata import cluster_layout
 from medalforge_lakehouse_data_spark.format.table import Table
 
 
@@ -85,17 +86,14 @@ def maybe_maintain(
     out: dict = {"job_id": job_id, "compacted": False, "clustered": False}
 
     def _recluster_incremental(tag: str) -> None:
-        props = table.metadata().properties
-        cl_cols = [c.strip() for c in props.get("cluster.columns", "").split(",")
-                   if c.strip()]
-        if not (policy.cluster_incremental and cl_cols):
+        layout = cluster_layout(table.metadata().properties)
+        if not (policy.cluster_incremental and layout):
             return
         km = clustering.cluster_rewrite(
             table, spark,
-            columns=tuple(cl_cols),
-            curve=props.get("cluster.curve", "zorder"),
-            target_file_bytes=int(props.get("cluster.target-file-bytes",
-                                            policy.target_file_bytes)),
+            columns=layout.columns,
+            curve=layout.curve,
+            target_file_bytes=layout.target_file_bytes or policy.target_file_bytes,
             mode="incremental",
             min_input_files=1,  # even a single untagged file re-clusters
             migrate_spec=policy.migrate_spec,

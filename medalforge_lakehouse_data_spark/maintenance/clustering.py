@@ -6,17 +6,23 @@ From-scratch equivalent:
 
   1. Global per-column bounds come from manifest stats (driver-side,
      no data scan) — fallback to a distributed min/max agg.
-  2. A pandas UDF normalizes each cluster column to b bits and
-     interleaves them into a 64-bit Morton or Hilbert key (vectorized
-     numpy over Arrow batches — functions/zorder.py).
-  3. ``repartitionByRange(n, _zkey)`` + ``sortWithinPartitions(_zkey)``
-     lays rows out along the curve; each output file covers a disjoint
-     curve range, so its per-column min/max boxes are tight → scan
-     pruning on ANY clustered column works (north_star pruning metric).
+  2. Each cluster column is normalized to b bits and the coordinates
+     are interleaved into a 64-bit curve key: a Column expression for
+     Morton (Z-order; whole-stage codegen, no Python boundary), a pandas
+     UDF over Arrow batches for Hilbert (functions/zorder.py). Only
+     numeric columns can be keyed; anything else is refused before the
+     layout is recorded.
+  3. One keys-only percentile pass cuts the curve into ranges; a routing
+     UDF sends every row to its range's shuffle partition and each
+     partition is sorted by the key (``write_clustered``). Each output
+     file covers a disjoint curve range, so its per-column min/max boxes
+     are tight → scan pruning on ANY clustered column works.
   4. One atomic snapshot swaps all files (old snapshot still readable).
 
-At 1000-executor scale the only shuffle is the single range partition,
-sized by target file bytes; the curve key costs one Arrow pass."""
+A layout-preserving MERGE writes through the same ``write_clustered``,
+served the boundary list the last full rewrite recorded while it still
+describes the table. At 1000-executor scale the only shuffle is the
+single routed one, sized by target file bytes."""
 
 from __future__ import annotations
 
@@ -29,14 +35,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, NumericType
 
+from medalforge_lakehouse_data_spark.format.metadata import ClusterLayout, cluster_layout
 from medalforge_lakehouse_data_spark.format.table import CommitConflictError, Table
-from medalforge_lakehouse_data_spark.functions.zorder import (
-    hilbert_index,
-    morton_interleave,
-    normalize_to_bits,
-)
+from medalforge_lakehouse_data_spark.functions.zorder import hilbert_index, normalize_to_bits
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -65,7 +68,7 @@ def column_bounds(table: Table, columns: Sequence[str], snapshot_id: int | None 
 
 def curve_bits(ncols: int) -> int:
     """Bits per dimension for a 64-bit curve key — the SINGLE definition
-    shared by the Column expression and the vectorized UDF."""
+    shared by the Morton Column expression and the Hilbert UDF."""
     bits = 63 // ncols if ncols > 1 else 63
     return min(bits, 21 if ncols == 3 else 32 if ncols == 2 else 63)
 
@@ -73,15 +76,12 @@ def curve_bits(ncols: int) -> int:
 def _normalized_col(c, lo, hi, bits: int):
     """Column replica of zorder.normalize_to_bits, op-for-op: same IEEE
     double arithmetic in the same order, so the JVM key is bit-identical
-    to the numpy kernel's (property-tested). NULL → raw 0.0 (pandas
+    to the numpy kernel's (tested against it). NULL → raw 0.0 (pandas
     na_value), NaN → coordinate 0, ±inf clipped to the edges."""
     top = float((1 << bits) - 1)
     if lo is None or hi is None:
         return F.lit(0).cast("long")
-    try:
-        flo, fhi = float(lo), float(hi)
-    except (TypeError, ValueError):
-        return None
+    flo, fhi = float(lo), float(hi)
     if not fhi > flo:
         return F.lit(0).cast("long")
     # NULL and NaN both become RAW 0.0 before scaling — pandas'
@@ -112,25 +112,16 @@ def _spread2_col(x):
     return x
 
 
-def curve_key_col(columns: Sequence[str], bounds: dict, curve: str = "zorder"):
-    """Pure-Column z-order key — the whole-stage-codegen replacement for
-    the pandas UDF on the Morton path (guide §4.1: eliminate the Python
-    boundary; rows no longer cross JVM↔Python just to be keyed). The
-    normalize + bit-spread pipeline replicates functions/zorder.py
-    bit-for-bit (sign bit always clear, so int64 ordering == uint64
-    ordering exactly as the numpy kernel guarantees). Returns None when
-    this curve/bounds combination needs the numpy kernel (hilbert's
-    state-transform walk, or non-numeric bounds) — callers fall back to
-    curve_key_udf."""
-    if curve != "zorder" or not 1 <= len(columns) <= 3:
-        return None
+def curve_key_col(columns: Sequence[str], bounds: dict):
+    """Z-order (Morton) key of 1-3 numeric columns as a pure Column:
+    whole-stage codegen, no row crosses into Python. The normalize +
+    bit-spread pipeline replicates functions/zorder.py bit-for-bit (sign
+    bit always clear, so int64 ordering == uint64 ordering exactly as the
+    numpy kernel guarantees)."""
+    if not 1 <= len(columns) <= 3:
+        raise ValueError(f"a Z-order key interleaves 1-3 columns, got {len(columns)}")
     bits = curve_bits(len(columns))
-    norm = []
-    for c in columns:
-        nc = _normalized_col(F.col(c), bounds[c][0], bounds[c][1], bits)
-        if nc is None:
-            return None
-        norm.append(nc)
+    norm = [_normalized_col(F.col(c), bounds[c][0], bounds[c][1], bits) for c in columns]
     if len(norm) == 1:
         return norm[0]
     if len(norm) == 2:
@@ -143,8 +134,11 @@ def curve_key_col(columns: Sequence[str], bounds: dict, curve: str = "zorder"):
     )
 
 
-def curve_key_udf(columns: Sequence[str], bounds: dict, curve: str = "zorder"):
-    """pandas UDF computing the 64-bit space-filling-curve key."""
+def curve_key_udf(columns: Sequence[str], bounds: dict):
+    """pandas UDF computing the 64-bit Hilbert key of numeric columns.
+    Skilling's transform stays in numpy: as a Column (an ``aggregate``
+    over the levels) it keyed 1M rows in 33-39 s against 1.3-2.0 s here
+    (local[4], 3 runs each)."""
     bits = curve_bits(len(columns))
     lo_hi = [bounds[c] for c in columns]
 
@@ -156,11 +150,7 @@ def curve_key_udf(columns: Sequence[str], bounds: dict, curve: str = "zorder"):
             )
             for s, (lo, hi) in zip(cols, lo_hi)
         ]
-        if curve == "hilbert":
-            key = hilbert_index(norm, bits)
-        else:
-            key = morton_interleave(norm)
-        return pd.Series(key)
+        return pd.Series(hilbert_index(norm, bits))
 
     return _key
 
@@ -172,41 +162,12 @@ def with_curve_key(
     curve: str = "zorder",
     out_col: str = "_zkey",
 ) -> DataFrame:
-    expr = curve_key_col(columns, bounds, curve)
-    if expr is not None:  # zorder: JVM codegen, no Python boundary
-        return df.withColumn(out_col, expr)
-    udf = curve_key_udf(columns, bounds, curve)  # hilbert / exotic bounds
-    return df.withColumn(out_col, udf(*[F.col(c) for c in columns]))
-
-
-def recorded_layout(props: dict, columns: Sequence[str], curve: str):
-    """Load the boundary set a full-mode cluster job recorded, if it
-    matches this (curve, columns) layout. Returns (bounds, boundaries,
-    rows_at_record) or None. ``bounds`` are the normalization min/max
-    (``cluster.bounds``) IN FORCE when the boundaries were computed: a
-    consumer re-keying rows against the recorded boundaries must
-    normalize with THESE bounds, not fresh ones, or the keys and the
-    layout disagree."""
-    import json as _json
-
-    raw_bounds, raw = props.get("cluster.bounds"), props.get("cluster.boundaries")
-    if not raw_bounds or not raw:
-        return None
-    if props.get("cluster.curve", "zorder") != curve:
-        return None
-    rec_cols = [c.strip() for c in props.get("cluster.columns", "").split(",")
-                if c.strip()]
-    if rec_cols != list(columns):
-        return None
-    try:
-        bounds = {c: tuple(v) for c, v in _json.loads(raw_bounds).items()}
-        bnds = [int(x) for x in raw.split(",") if x]
-        rows = int(props.get("cluster.boundaries-rows", "0"))
-    except (ValueError, AttributeError, TypeError):
-        return None
-    if any(c not in bounds for c in columns):
-        return None
-    return bounds, bnds, rows
+    """``df`` plus the ``curve`` key of ``columns`` under the
+    normalization ``bounds``: the Column form for zorder, the numpy UDF
+    for hilbert."""
+    if curve == "zorder":
+        return df.withColumn(out_col, curve_key_col(columns, bounds))
+    return df.withColumn(out_col, curve_key_udf(columns, bounds)(*[F.col(c) for c in columns]))
 
 
 def bounds_within(inner: dict, outer: dict, columns: Sequence[str],
@@ -265,7 +226,10 @@ def partition_routing_udf(boundaries: list[int], preimages: list[int]):
     Vectorized searchsorted; rows whose key EQUALS one or more boundary
     values (a hot key spanning several quantiles) are spread across the
     adjacent partitions by the tie hash — the skew split RangePartitioner
-    cannot do (it never separates equal keys)."""
+    cannot do (it never separates equal keys). A Column binary search
+    (``aggregate`` over the boundary array) routed 1M rows in 1.4-1.7 s
+    against 0.5-0.8 s here at 4,095 boundaries, and only tied at 31
+    (local[4], 3 runs each)."""
     b = np.asarray(boundaries, dtype=np.int64)
     px_lut = np.asarray(preimages, dtype=np.int64)
 
@@ -320,14 +284,13 @@ def _spark_hash_long(values: "np.ndarray") -> "np.ndarray":
     return h1.astype(np.int32)
 
 
-def hash_preimages(spark: SparkSession, n: int) -> list[int]:
+def hash_preimages(n: int) -> list[int]:
     """For each partition id p in [0, n), an integer x with
     pmod(hash(x), n) == p — so ``repartition(n, col)`` over the mapped
     column routes each range id to its OWN shuffle partition (plain
     hash-partitioning on the id itself would collide ids and merge
     ranges into one file, widening its min/max bounds). Computed
-    driver-side with a numpy replica of Spark's Murmur3 long hash
-    (``spark`` is unused, kept for signature stability)."""
+    driver-side with a numpy replica of Spark's Murmur3 long hash."""
     limit = max(64, 24 * n)
     for _ in range(6):
         xs = np.arange(limit, dtype=np.int64)
@@ -344,31 +307,70 @@ def hash_preimages(spark: SparkSession, n: int) -> list[int]:
     raise RuntimeError(f"could not find hash preimages for n={n}")
 
 
-def write_range_partitioned(
+def write_clustered(
     table: Table,
     spark: SparkSession,
-    keyed: DataFrame,
+    rows: DataFrame,
+    layout: ClusterLayout,
+    tie_columns: Sequence[str],
     n_out: int,
-    boundaries: list[int],
-    sort_within: list[str],
-) -> list:
-    """One-pass range-partitioned write: assign each row its range id from
-    precomputed ``boundaries``, map the id through a hash preimage, and
-    hash-shuffle — rows land range-clustered without repartitionByRange's
-    second evaluation of the child plan."""
-    if n_out <= 1 or not boundaries:
-        return table._write_data_files(
-            spark, keyed, target_file_count=max(1, n_out),
-            sort_within=sort_within,
-        )
-    px_udf = partition_routing_udf(boundaries, hash_preimages(spark, n_out))
-    keyed = keyed.withColumn(
-        "_px", px_udf(F.col(sort_within[0]), F.col(sort_within[-1]))
-    )
-    return table._write_data_files(
-        spark, keyed, target_file_count=n_out,
-        sort_within=sort_within, shuffle_col="_px",
-    )
+    keys_only,
+    bounds: dict | None = None,
+    source_bounds: dict | None = None,
+):
+    """The one layout-preserving write, shared by ``cluster_rewrite`` and
+    a copy-on-write MERGE: key ``rows`` along ``layout``'s curve, break
+    key ties with ``_ztie`` (an xxhash64 of ``tie_columns``, so a hot key
+    spreads across files), route each row to its curve range in ONE
+    shuffle and tag the files with the layout. The routing UDF maps each
+    row's range id through a hash preimage, so a plain hash exchange
+    lands every range in its own partition: no second evaluation of the
+    child plan, as repartitionByRange's sampler would run.
+
+    The range boundaries are served or computed. A merge passes
+    ``source_bounds`` (its source's min/max per layout column, all-NULL
+    columns left out) and is served the list the last full rewrite
+    recorded, with zero extra jobs and ``n_out`` following the list,
+    while that list still describes the table: table rows at most 2x
+    the rows at record time, and both the table's current bounds and
+    ``source_bounds`` inside the recorded bounds (``bounds_within``), so
+    the rows normalize exactly as the layout was keyed. Otherwise one
+    percentile pass over the keys-only frame ``keys_only()`` computes
+    them under ``bounds`` (default: the table's manifest bounds).
+
+    Returns (added entries, boundaries, "recorded" | "computed"), or None
+    when a layout column has no manifest bounds (nothing is written)."""
+    columns = list(layout.columns)
+    if bounds is None:
+        bounds = column_bounds(table, columns)
+        if any(bounds[c][0] is None for c in columns):
+            return None
+    served = False
+    if source_bounds is not None and layout.boundaries is not None:
+        snap = table.metadata().current_snapshot()
+        table_rows = snap.summary.get("total_rows", 0) if snap else 0
+        served = (0 < layout.rows and table_rows <= 2 * layout.rows
+                  and bounds_within(bounds, layout.bounds, columns)
+                  and bounds_within(source_bounds, layout.bounds, list(source_bounds)))
+    if served:
+        bounds, boundaries = layout.bounds, layout.boundaries
+        n_out = len(boundaries) + 1
+    keyed = with_curve_key(rows, columns, bounds, layout.curve) \
+        .withColumn("_ztie", F.xxhash64(*[F.col(c) for c in tie_columns]))
+    if not served:
+        boundaries = curve_boundaries(
+            with_curve_key(keys_only(), columns, bounds, layout.curve), n_out)
+    shuffle_col = None
+    if n_out > 1 and boundaries:
+        route = partition_routing_udf(boundaries, hash_preimages(n_out))
+        keyed = keyed.withColumn("_px", route(F.col("_zkey"), F.col("_ztie")))
+        shuffle_col = "_px"
+    added = table._write_data_files(spark, keyed, target_file_count=n_out,
+                                    sort_within=["_zkey", "_ztie"], shuffle_col=shuffle_col)
+    tag = {"curve": layout.curve, "columns": columns}
+    for e in added:
+        e.cluster = tag
+    return added, boundaries, "recorded" if served else "computed"
 
 
 def cluster_rewrite(
@@ -414,36 +416,46 @@ def cluster_rewrite(
     report migrate_files/migrate_bytes/migrate_remaining_files.
 
     Output files are tagged (DataFile.cluster) and the clustering spec
-    is recorded in table properties so MERGE can preserve the layout."""
+    is recorded in table properties so MERGE can preserve the layout.
+    A curve other than zorder/hilbert, or a column the curve key cannot
+    key (not numeric; more than 3 for zorder), raises ValueError before
+    anything is recorded or read."""
     t0 = time.monotonic()
     job_id = job_id or f"cluster-{int(time.time())}"
     if mode not in ("full", "incremental"):
         raise ValueError(f"mode must be full|incremental, got {mode!r}")
+    if curve not in ("zorder", "hilbert"):
+        raise ValueError(f"curve must be zorder|hilbert, got {curve!r}")
+    if not 1 <= len(columns) <= (3 if curve == "zorder" else 63):
+        raise ValueError(f"a {curve} key cannot interleave {len(columns)} columns")
+    schema = table.schema
+    for c in columns:
+        dtype = schema[c].dataType if c in schema.fieldNames() else None
+        if not isinstance(dtype, NumericType):
+            raise ValueError(
+                f"cluster column {c!r} is {dtype.simpleString() if dtype else 'missing'}; "
+                f"the curve key needs a numeric column")
     tag = {"curve": curve, "columns": list(columns)}
+    layout = ClusterLayout(curve, tuple(columns), target_file_bytes)
     # Skew guard: with Zipf-heavy keys (one phash = 25% of rows) the range
     # partitioner's sampled boundaries collapse onto the hot key and most
     # output partitions come out empty. A deterministic high-cardinality
     # tie-breaker spreads equal-key rows across partitions while keeping
     # the curve order — per-file min/max bounds stay tight.
-    non_binary = [
-        f.name for f in table.schema.fields if f.dataType.typeName() != "binary"
-    ]
+    non_binary = [f.name for f in schema.fields if f.dataType.typeName() != "binary"]
     # record the layout so MERGE/compaction can preserve it (and for
     # incremental re-clustering); property write precedes the data commit,
     # which is the one guarded by commit_key. A (curve, columns) change
     # clears the old config's bounds/boundary records in the same step —
     # stale ones would otherwise be served under the new config's label
     # until this job's final record lands (round-4 ADVICE #4 family).
-    props0 = table.metadata().properties
-    old_cols = [c.strip() for c in props0.get("cluster.columns", "").split(",")
-                if c.strip()]
+    old = cluster_layout(table.metadata().properties)
     new_props: dict = {
         "cluster.curve": curve,
         "cluster.columns": ",".join(columns),
         "cluster.target-file-bytes": str(target_file_bytes),
     }
-    if old_cols and (old_cols != list(columns)
-                     or props0.get("cluster.curve", "zorder") != curve):
+    if old is not None and (old.columns != layout.columns or old.curve != curve):
         new_props.update({"cluster.bounds": None, "cluster.boundaries": None,
                           "cluster.boundaries-rows": None})
     table.set_properties(new_props)
@@ -517,20 +529,14 @@ def cluster_rewrite(
         # aligns files written under older versions and still applies
         # deletes newer than the planned entries
         df = table.read_entries(spark, files)
-        keyed = with_curve_key(df, columns, bounds, curve)
-        keyed = keyed.withColumn("_ztie", F.xxhash64(*[F.col(c) for c in non_binary]))
         # Boundaries from a keys-only pass (cluster columns pruned at the
         # parquet scan — the image blobs are never read), then ONE full
         # pass to shuffle+sort+write. repartitionByRange would execute the
         # full plan twice (its sampler re-evaluates the child), which both
         # doubled the rewrite cost and was the fixed sampling cost that
         # capped cluster-stage scaling (round-2 TODO #9).
-        keys_only = with_curve_key(df.select(*columns), columns, bounds, curve)
-        bnds = curve_boundaries(keys_only, n_out)
-        added = write_range_partitioned(
-            table, spark, keyed, n_out, bnds, ["_zkey", "_ztie"])
-        for e in added:
-            e.cluster = tag
+        added, bnds, _ = write_clustered(table, spark, df, layout, non_binary, n_out,
+                                         lambda: df.select(*columns), bounds=bounds)
         # a FULL rewrite replaces every data file; the scan that produced the
         # rows applied all equality deletes, so the delete files are spent —
         # drop them in the same atomic commit (merge-on-read cleanup)

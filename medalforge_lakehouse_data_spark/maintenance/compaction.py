@@ -25,11 +25,13 @@ import time
 
 from pyspark.sql import SparkSession
 
-from medalforge_lakehouse_data_spark.format.metadata import DataFile
+from medalforge_lakehouse_data_spark.format.metadata import DataFile, cluster_layout
 from medalforge_lakehouse_data_spark.format.table import CommitConflictError, Table
 from medalforge_lakehouse_data_spark.maintenance.checkpoint import JobCheckpoint
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
+# partitions ``compact`` rewrites at once, one Spark job per thread
+MAX_CONCURRENT_UNITS = 4
 
 
 def ffd_bins(files: list[DataFile], target_bytes: int) -> list[list[DataFile]]:
@@ -133,20 +135,17 @@ def compact_deletes(
             # HERE because the fold input is O(delete-affected bytes),
             # not table-sized (merge/cluster use the one-pass range write
             # instead).
-            props = table.metadata().properties
-            cl_cols = [c.strip() for c in
-                       props.get("cluster.columns", "").split(",") if c.strip()]
+            layout = cluster_layout(table.metadata().properties)
             sort_within = None
-            if cl_cols and all(c in df.columns for c in cl_cols):
+            if layout is not None and all(c in df.columns for c in layout.columns):
                 from medalforge_lakehouse_data_spark.maintenance.clustering import (
                     column_bounds,
                     with_curve_key,
                 )
 
-                bounds = column_bounds(table, cl_cols)
-                if all(bounds[c][0] is not None for c in cl_cols):
-                    df = with_curve_key(df, cl_cols, bounds,
-                                        props.get("cluster.curve", "zorder"))
+                bounds = column_bounds(table, layout.columns)
+                if all(bounds[c][0] is not None for c in layout.columns):
+                    df = with_curve_key(df, layout.columns, bounds, layout.curve)
                     sort_within = ["_zkey"]
             added = table._write_data_files(spark, df, target_file_count=n_out,
                                             sort_within=sort_within)
@@ -183,7 +182,6 @@ def compact(
     min_file_bytes: int | None = None,
     job_id: str | None = None,
     checkpoint_root: str | None = None,
-    max_concurrent_units: int = 4,
 ) -> dict:
     """Run compaction; returns metrics. Resumable via (job_id,
     checkpoint_root): completed partitions are skipped on re-run and the
@@ -263,7 +261,7 @@ def compact(
         # loop (disjoint file sets never conflict). Thread count is
         # bounded — each thread drives a full Spark job.
         units = sorted(plan.items())
-        pool = min(max_concurrent_units, max(1, len(units)))
+        pool = min(MAX_CONCURRENT_UNITS, max(1, len(units)))
         if pool <= 1:
             for item in units:
                 run_unit(item)

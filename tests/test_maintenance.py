@@ -132,6 +132,41 @@ def test_hilbert_clustering(spark, img_table):
     assert pm["files_kept"] < pm["files_total"]
 
 
+def test_unkeyable_layout_refused_before_recording(spark, tmp_path):
+    """A layout the curve key cannot compute (a string column, an unknown
+    curve) is refused with a ValueError before any property is written
+    or any Spark job runs; later folds and re-keyed merges are
+    unaffected."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from medalforge_lakehouse_data_spark.operators.merge import merge_into
+
+    schema = StructType([StructField("k", LongType()), StructField("s", StringType())])
+    t = Table.create(str(tmp_path / "t"), schema)
+    t.append(spark, spark.createDataFrame([(i, f"s{i}") for i in range(40)], schema),
+             target_file_count=4)
+    props = dict(t.metadata().properties)
+    sc = spark.sparkContext
+    sc.setJobGroup("unkeyable-layout", "unkeyable-layout")
+    try:
+        with pytest.raises(ValueError, match="'s' is string"):
+            clustering.cluster_rewrite(t, spark, columns=("k", "s"))
+        with pytest.raises(ValueError, match="curve"):
+            clustering.cluster_rewrite(t, spark, columns=("k",), curve="peano")
+    finally:
+        sc.setJobGroup("after", "after")
+    assert not sc.statusTracker().getJobIdsForGroup("unkeyable-layout")
+    assert dict(t.metadata().properties) == props
+
+    merge_into(t, spark.createDataFrame([(3, "x"), (7, "x")], schema), ["k"], spark,
+               when_matched="delete", when_not_matched=None, strategy="merge-on-read")
+    assert compaction.compact_deletes(t, spark)["files_in"] > 0
+    t.set_properties({"merge.cluster-rekey-min-bytes": "1"})
+    merge_into(t, spark.createDataFrame([(5, "new"), (100, "ins")], schema), ["k"], spark)
+    got = dict(t.scan(spark).select("k", "s").collect())
+    assert len(got) == 39 and got[5] == "new" and got[100] == "ins" and 3 not in got
+
+
 def test_rewrite_manifests(spark, img_table):
     t = img_table
     # several appends → several manifests

@@ -286,7 +286,7 @@ def test_spark_hash_long_replica_matches_spark(spark):
     assert all(got[v] == int(m) for v, m in zip(vals, mine))
     # preimage contract: pmod(hash(x_p), n) == p for every partition id
     n = 37
-    pre = hash_preimages(spark, n)
+    pre = hash_preimages(n)
     chk = (
         spark.createDataFrame([(i, x) for i, x in enumerate(pre)], "i int, x long")
         .select("i", F.pmod(F.hash("x"), F.lit(n)).alias("p"))

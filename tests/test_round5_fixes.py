@@ -26,6 +26,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from medalforge_lakehouse_data_spark.format.metadata import cluster_layout
 from medalforge_lakehouse_data_spark.format.table import (
     CommitConflictError,
     Table,
@@ -184,8 +185,9 @@ def test_cluster_config_change_clears_old_records(spark, tmp_path):
                                target_file_bytes=64 * 1024, mode="full")
     props = t.metadata().properties
     assert props["cluster.columns"] == "b,a"
-    rec = clustering.recorded_layout(props, ("b", "a"), "zorder")
-    assert rec is not None  # fresh record for the NEW config
+    rec = cluster_layout(props)
+    # fresh record for the NEW config
+    assert rec.columns == ("b", "a") and rec.boundaries is not None
 
 
 # ------------------------------------------ 4. growth + maybe_maintain

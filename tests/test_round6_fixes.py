@@ -83,20 +83,35 @@ def test_empty_target_insert_merge_fast_path(spark, tmp_path):
     assert t.scan(spark).count() == 50
 
 
-def test_jvm_zorder_key_bit_identical_to_numpy(spark):
-    """curve_key_col (whole-stage-codegen Morton path) must produce the
-    EXACT key the numpy pandas-UDF kernel produces — layouts, recorded
-    boundaries and the driver-side span replicas all assume one keying."""
+def _numpy_zorder_keys(rows, cols, bounds):
+    """The driver-side reference key: ``zorder.normalize_to_bits`` then
+    ``zorder.morton_interleave``, with NULL and NaN read as 0.0 as
+    pandas' ``to_numpy(na_value=0.0)`` reads them."""
     import math
+
+    import numpy as np
+
+    from medalforge_lakehouse_data_spark.functions import zorder
+    from medalforge_lakehouse_data_spark.maintenance.clustering import curve_bits
+
+    bits = curve_bits(len(cols))
+    norm = []
+    for c in cols:
+        v = np.array([0.0 if r[c] is None or (isinstance(r[c], float) and math.isnan(r[c]))
+                      else float(r[c]) for r in rows], dtype=np.float64)
+        norm.append(zorder.normalize_to_bits(v, bounds[c][0], bounds[c][1], bits))
+    return [int(k) for k in zorder.morton_interleave(norm)]
+
+
+def test_jvm_zorder_key_bit_identical_to_numpy(spark):
+    """curve_key_col (the Morton key's only path, a Column) must produce
+    the EXACT key the numpy kernel produces — layouts and recorded
+    boundaries assume one keying."""
     import random
 
-    from pyspark.sql import functions as F
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    from medalforge_lakehouse_data_spark.maintenance.clustering import (
-        curve_key_udf,
-        with_curve_key,
-    )
+    from medalforge_lakehouse_data_spark.maintenance.clustering import with_curve_key
 
     rng = random.Random(7)
     rows = []
@@ -123,12 +138,9 @@ def test_jvm_zorder_key_bit_identical_to_numpy(spark):
         (("c",), {"c": (0.0, 255.0)}),
         (("a", "b"), {"a": (5, 5), "b": (-1e9, 1e9)}),  # degenerate bound
     ]:
-        got = with_curve_key(df, cols, bounds, "zorder").select("_zkey")
-        udf = curve_key_udf(cols, bounds, "zorder")
-        want = df.withColumn("_zkey", udf(*[F.col(c) for c in cols])).select("_zkey")
-        g = [r[0] for r in got.collect()]
-        w = [r[0] for r in want.collect()]
-        assert g == w, f"key mismatch for {cols}"
+        got = with_curve_key(df, cols, bounds, "zorder").collect()
+        g = [r["_zkey"] for r in got]
+        assert g == _numpy_zorder_keys(got, cols, bounds), f"key mismatch for {cols}"
         assert all(x is not None and x >= 0 for x in g)
 
 
@@ -137,13 +149,9 @@ def test_one_column_zorder_key_parity_at_recorded_bounds(spark):
     the double 2^63: a value at exactly the recorded max must key to
     2^63-1 on both the Column path and the numpy kernel (the kernel used
     to wrap to -2^63). Checked in the repo's session and an ANSI-on one."""
-    from pyspark.sql import functions as F
     from pyspark.sql.types import DoubleType
 
-    from medalforge_lakehouse_data_spark.maintenance.clustering import (
-        curve_key_col,
-        curve_key_udf,
-    )
+    from medalforge_lakehouse_data_spark.maintenance.clustering import curve_key_col
 
     ansi = spark.newSession()
     ansi.conf.set("spark.sql.ansi.enabled", "true")
@@ -157,10 +165,8 @@ def test_one_column_zorder_key_parity_at_recorded_bounds(spark):
             bounds = {name: (min(finite), max(finite))}
             df = session.createDataFrame(
                 [(v,) for v in values], StructType([StructField(name, dtype)]))
-            got = df.select(curve_key_col([name], bounds).alias("k"),
-                            curve_key_udf([name], bounds)(F.col(name)).alias("u"))
-            rows = got.collect()
-            assert [r.k for r in rows] == [r.u for r in rows], name
+            rows = df.select(name, curve_key_col([name], bounds).alias("k")).collect()
+            assert [r.k for r in rows] == _numpy_zorder_keys(rows, [name], bounds), name
             assert rows[0].k == 0
             assert max(r.k for r in rows) == 2**63 - 1
             assert all(r.k >= 0 for r in rows)

@@ -19,7 +19,6 @@ import datetime as _dt
 import decimal as _dec
 import json
 import os
-import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
@@ -452,73 +451,3 @@ def read_manifest(root: str, entry) -> list[DataFile]:
     d = read_json(os.path.join(root, manifest_path(entry)))
     return [DataFile.from_json(e) for e in d["entries"]]
 
-
-class CommitLock:
-    """Best-effort advisory lock for single-writer commits.
-
-    O_CREAT|O_EXCL lockfile with stale-lock expiry. Real multi-writer
-    deployments would use a catalog with optimistic CAS (Iceberg-style);
-    the engine's commit API is shaped so that swap-in is localized here.
-    """
-
-    def __init__(self, root: str, timeout_s: float = 30.0, stale_s: float = 300.0):
-        self.path = os.path.join(root, "metadata", ".commit.lock")
-        self.timeout_s = timeout_s
-        self.stale_s = stale_s
-        self._fd: int | None = None
-        self._token: str | None = None
-
-    def __enter__(self):
-        os.makedirs(os.path.dirname(self.path), exist_ok=True)
-        self._token = f"{os.getpid()}:{uuid.uuid4().hex}"
-        deadline = time.monotonic() + self.timeout_s
-        while True:
-            try:
-                self._fd = os.open(self.path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(self._fd, self._token.encode())
-                os.fsync(self._fd)
-                return self
-            except FileExistsError:
-                try:
-                    age = time.time() - os.path.getmtime(self.path)
-                    if age > self.stale_s:
-                        # Atomic takeover: rename the stale lock to a unique
-                        # grave name — exactly one concurrent waiter wins the
-                        # rename, the losers hit FileNotFoundError and retry.
-                        # (Round-1 ADVICE: getmtime→unlink→create let two
-                        # waiters both steal, the second unlinking the
-                        # first's FRESH lock.)
-                        grave = f"{self.path}.stale.{uuid.uuid4().hex}"
-                        try:
-                            os.rename(self.path, grave)
-                            os.unlink(grave)
-                        except FileNotFoundError:
-                            pass
-                        continue
-                except FileNotFoundError:
-                    continue
-                if time.monotonic() > deadline:
-                    raise TimeoutError(f"commit lock busy: {self.path}")
-                time.sleep(0.05)
-
-    def refresh(self) -> None:
-        """Bump the lock's mtime so a long-running commit isn't mistaken
-        for a crashed holder by waiters applying the stale_s takeover."""
-        try:
-            os.utime(self.path)
-        except FileNotFoundError:
-            pass
-
-    def __exit__(self, *exc):
-        if self._fd is not None:
-            os.close(self._fd)
-            self._fd = None
-        # Verify ownership before unlinking: if our lock went stale and a
-        # thief took over, the file now holds THEIR token — deleting it
-        # would hand the lock to a third writer mid-commit.
-        try:
-            with open(self.path) as f:
-                if f.read() == self._token:
-                    os.unlink(self.path)
-        except FileNotFoundError:
-            pass

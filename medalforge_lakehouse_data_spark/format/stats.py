@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 from concurrent.futures import ThreadPoolExecutor
+from decimal import Decimal
 from typing import Any
 
 import pyarrow.parquet as pq
@@ -35,6 +36,16 @@ def _merge_minmax(cur: ColumnStats, mn: Any, mx: Any, nulls: int | None) -> None
         cur.null_count = (cur.null_count or 0) + nulls
 
 
+def _int_decimal_scale(column) -> int | None:
+    """The scale of a decimal stored as INT32/INT64 (Spark's encoding for
+    precision <= 18), whose footer bounds pyarrow does not decode; None
+    for any other column."""
+    if (column.logical_type.type == "DECIMAL"
+            and column.physical_type in ("INT32", "INT64")):
+        return column.scale
+    return None
+
+
 def file_stats(abs_path: str, stat_columns: list[str] | None = None) -> tuple[int, int, dict[str, ColumnStats]]:
     """Return (rows, bytes, {column: ColumnStats}) for one Parquet file."""
     pf = pq.ParquetFile(abs_path)
@@ -42,6 +53,7 @@ def file_stats(abs_path: str, stat_columns: list[str] | None = None) -> tuple[in
     schema = md.schema
     want = set(stat_columns) if stat_columns is not None else None
     col_names = [schema.column(i).name for i in range(len(schema))]
+    scales = [_int_decimal_scale(schema.column(i)) for i in range(len(schema))]
     stats: dict[str, ColumnStats] = {}
     for rg in range(md.num_row_groups):
         rg_md = md.row_group(rg)
@@ -53,13 +65,18 @@ def file_stats(abs_path: str, stat_columns: list[str] | None = None) -> tuple[in
             try:
                 st = col.statistics
             except Exception:
-                continue  # pyarrow can't extract stats for some types (e.g. decimal)
+                continue  # pyarrow can't extract stats for some types
             if st is None:
                 continue
             cur = stats.setdefault(name, ColumnStats())
             try:
-                mn = st.min if st.has_min_max else None
-                mx = st.max if st.has_min_max else None
+                if st.has_min_max and scales[i] is not None:
+                    # the raw values are the unscaled integers
+                    mn, mx = (Decimal(v).scaleb(-scales[i])
+                              for v in (st.min_raw, st.max_raw))
+                else:
+                    mn = st.min if st.has_min_max else None
+                    mx = st.max if st.has_min_max else None
             except Exception:
                 mn = mx = None
             # Binary payloads (non-UTF8) produce bytes min/max — drop them,

@@ -21,6 +21,16 @@ Design points for 100 TB scale:
     duplicated column is RLE-constant per file, ~free in Parquet.
   * Commits are snapshots: append/rewrite never mutate existing files,
     so a reader pinned to snapshot N is isolated from maintenance.
+    Every written file reaches ``data/`` through one publish step
+    (``Table._publish``), and every snapshot that adds or removes files
+    is built by ``Table.rewrite_files`` (append and merge-on-read merges
+    remove nothing), on the optimistic CAS of ``_commit_metadata``.
+    ``overwrite_all`` (removes whatever is current at the CAS) and
+    ``rewrite_manifests`` (re-packs manifests) keep their own builds.
+  * Read-then-rewrite operators (MERGE, compaction, delete fold,
+    clustering, transcode) run plan → read → write → commit as one unit
+    under ``replan_on_conflict``: a merge-on-read delete landing between
+    read and commit fails the commit, and the unit re-plans.
   * ``commit_key`` makes commits idempotent — a resumed job that already
     committed becomes a no-op (north_rule resumability).
 """
@@ -33,7 +43,7 @@ import time
 import urllib.parse
 import uuid
 from functools import reduce
-from typing import Any, Callable, Iterable
+from typing import Any, Callable, Iterable, TypeVar
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -82,6 +92,28 @@ class CommitConflictError(RuntimeError):
     """A rewrite planned from snapshot S conflicts with a commit made after
     S (e.g. a merge-on-read delete file landed between plan and commit).
     The caller should re-read the affected files and retry the unit."""
+
+
+# plan → read → write → commit runs of one unit before a conflict is raised
+REPLAN_ATTEMPTS = 5
+
+T = TypeVar("T")
+
+
+def replan_on_conflict(unit: Callable[[], T]) -> T:
+    """Run ``unit`` — a closure that plans from the live table, reads,
+    writes and commits with ``validate_from_sequence`` — and re-run it
+    from the plan when its commit raises CommitConflictError, up to
+    ``REPLAN_ATTEMPTS`` runs in all. Each run plans afresh, so it reads
+    the delete file that caused the conflict; a lost run leaves only
+    unreferenced files, which snapshot expiry removes. Every
+    read-then-rewrite operator commits through this one loop."""
+    for _ in range(REPLAN_ATTEMPTS - 1):
+        try:
+            return unit()
+        except CommitConflictError:
+            pass
+    return unit()
 
 # widenings that lose no information (Iceberg's promotion set)
 _SAFE_WIDENINGS = {("integer", "long"), ("float", "double")}
@@ -197,9 +229,9 @@ def _write_parquet(rows: pa.Table, path: str, stat_cols: list[str]) -> None:
     """One driver-written parquet file: snappy, timestamps as INT64
     microseconds, footer min/max only for the ``stat_cols`` whose
     Spark-written twin has bounds the footer reader decodes. Spark writes
-    zoned timestamps as INT96 and decimals of precision <= 18 as INT32/
-    INT64, and neither yields bounds, so those columns get none here
-    either: manifests hold the same bounds whichever side wrote a file."""
+    zoned timestamps as INT96, which yields no bounds, so those columns
+    get none here either: manifests hold the same bounds whichever side
+    wrote a file."""
     stats = [c for c in stat_cols if c in rows.column_names
              and not _spark_drops_bounds(rows.schema.field(c).type)]
     pq.write_table(rows, path, compression="snappy", write_statistics=stats,
@@ -207,8 +239,7 @@ def _write_parquet(rows: pa.Table, path: str, stat_cols: list[str]) -> None:
 
 
 def _spark_drops_bounds(t: pa.DataType) -> bool:
-    return ((pa.types.is_timestamp(t) and t.tz is not None)
-            or (pa.types.is_decimal(t) and t.precision <= 18))
+    return pa.types.is_timestamp(t) and t.tz is not None
 
 
 def _write_arrow_layout(rows: pa.Table, staging: str, columns: list[str],
@@ -283,6 +314,24 @@ def _with_field_ids(schema: StructType, next_id: int = 1):
             nid += 1
         fields.append(StructField(f.name, f.dataType, f.nullable, md))
     return StructType(fields), nid - 1
+
+
+def _partition_field_types(meta: TableMetadata) -> dict:
+    """Partition field name → the Spark type its layout-directory value
+    parses to: int for bucket and days, the source type for identity and
+    string truncate, long for numeric truncate."""
+    schema = meta.schema
+    out = {}
+    for p in meta.partition_spec:
+        fname, src_col, transform, _n = parse_partition_field(p)
+        src_type = schema[src_col].dataType
+        if transform in ("bucket", "days"):
+            out[fname] = IntegerType()
+        elif transform == "truncate" and src_type.typeName() != "string":
+            out[fname] = LongType()
+        else:
+            out[fname] = src_type
+    return out
 
 
 def _cast_partition_value(raw: str, dtype) -> Any:
@@ -818,8 +867,7 @@ class Table:
         version file itself as the CAS token. If a winner crashed between
         claiming the slot and swapping the pointer, any later writer heals
         the pointer forward (the claimed file is complete by construction)
-        and retries on top of it. Replaces the round-1 advisory CommitLock
-        (VERDICT missing #4)."""
+        and retries on top of it."""
         import random
         import time as _time
 
@@ -948,33 +996,38 @@ class Table:
         the image column) or a MERGE (the join re-runs).
         """
         meta = self.metadata()
-        spec = meta.partition_spec
         schema = meta.schema
-        staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
         stat_cols = self._stat_columns(schema)
         layout = layout_columns(meta)
-        if isinstance(df, pa.Table):
-            _write_arrow_layout(df, staging, schema.fieldNames(), list(layout),
-                                stat_cols)
-        else:
-            _write_spark_layout(df, staging, schema.fieldNames(), layout,
-                                target_file_count, sort_within, shuffle_col)
 
-        # Move part files into data/, preserving layout dirs; parse partition
-        # values from the layout dir names for manifest entries.
-        field_types = {}
-        for p in spec:
-            fname, src_col, transform, _n = parse_partition_field(p)
-            if transform in ("bucket", "days"):
-                field_types[fname] = IntegerType()
-            elif transform == "truncate":
-                field_types[fname] = (
-                    schema[src_col].dataType
-                    if schema[src_col].dataType.typeName() == "string"
-                    else LongType()
-                )
+        def write(staging: str) -> None:
+            if isinstance(df, pa.Table):
+                _write_arrow_layout(df, staging, schema.fieldNames(), list(layout),
+                                    stat_cols)
             else:
-                field_types[fname] = schema[src_col].dataType
+                _write_spark_layout(df, staging, schema.fieldNames(), layout,
+                                    target_file_count, sort_within, shuffle_col)
+
+        bloom_cols = [c.strip() for c in
+                      meta.properties.get("bloom.columns", "").split(",") if c.strip()]
+        entries = self._publish(write, "", _partition_field_types(meta),
+                                stat_cols, bloom_cols)
+        sv = meta.current_schema_version
+        for e in entries:
+            e.schema_version = sv
+        return entries
+
+    def _publish(self, write: Callable[[str], None], subdir: str,
+                 field_types: dict, stat_cols: list[str],
+                 bloom_cols: list[str] | None = None) -> list[DataFile]:
+        """The one publish step for data and delete files: ``write`` fills
+        a fresh ``_staging/<uuid>`` directory with part files, which move
+        to ``data/<subdir>`` under a ``uuid12-`` prefix, keeping their
+        layout directories (``__p_<field>=v`` → ``<field>=v``) and taking
+        partition values from those names (typed by ``field_types``).
+        Returns their manifest entries, footer stats and blooms included."""
+        staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
+        write(staging)
         rels: list[str] = []
         partitions: dict[str, dict[str, Any]] = {}
         for dirpath, _dirs, fnames in os.walk(staging):
@@ -995,21 +1048,15 @@ class Table:
                     else:
                         clean_parts.append(seg)
                 new_name = f"{uuid.uuid4().hex[:12]}-{fn}"
-                rel = os.path.join("data", *clean_parts, new_name)
+                rel = os.path.join("data", subdir, *clean_parts, new_name)
                 abs_dest = os.path.join(self.root, rel)
                 os.makedirs(os.path.dirname(abs_dest), exist_ok=True)
                 os.replace(src, abs_dest)
                 rels.append(rel)
                 partitions[rel] = pvals
         shutil.rmtree(staging, ignore_errors=True)
-        bloom_cols = [c.strip() for c in
-                      meta.properties.get("bloom.columns", "").split(",") if c.strip()]
-        entries = collect_entries(self.root, rels, partitions, stat_cols,
-                                  bloom_columns=bloom_cols)
-        sv = meta.current_schema_version
-        for e in entries:
-            e.schema_version = sv
-        return entries
+        return collect_entries(self.root, rels, partitions, stat_cols,
+                               bloom_columns=bloom_cols)
 
     def _stat_columns(self, schema: StructType) -> list[str]:
         prop = self.metadata().properties.get("stats.columns")
@@ -1029,8 +1076,9 @@ class Table:
         target_file_count: int | None = None,
         sort_within: list[str] | None = None,
     ) -> Snapshot:
-        """Append = write new data files + snapshot referencing old manifests
-        plus one new manifest (reference S6/S7 semantics, merge.py:82-110).
+        """Append = write new data files, then ``rewrite_files`` with nothing
+        removed: the parent's manifests plus one new manifest (reference
+        S6/S7 semantics, merge.py:82-110).
 
         With a ``commit_key`` the data write is skipped entirely when the key
         was already committed (idempotent resume) — checked BEFORE writing.
@@ -1040,29 +1088,8 @@ class Table:
             if prior is not None:
                 return prior
         entries = self._write_data_files(spark, df, target_file_count, sort_within)
-        if not entries:
-            # still commit an empty snapshot for lineage continuity
-            return self._commit(
-                "append",
-                lambda meta, sid: (
-                    list(meta.current_snapshot().manifest_list)
-                    if meta.current_snapshot()
-                    else [],
-                    _summary(meta, [], []),
-                ),
-                commit_key,
-            )
-
-        def build(meta: TableMetadata, sid: int):
-            for e in entries:
-                e.seq = sid  # merge-on-read: deletes apply to seq < theirs
-            new_manifest = write_manifest(self.root, entries)
-            parent = meta.current_snapshot()
-            manifests = list(parent.manifest_list) if parent else []
-            manifests.append(new_manifest)
-            return manifests, _summary(meta, entries, [])
-
-        return self._commit("append", build, commit_key)
+        # an empty write still commits a snapshot, for lineage continuity
+        return self.rewrite_files([], entries, operation="append", commit_key=commit_key)
 
     def overwrite_all(
         self, spark: SparkSession, df: DataFrame, commit_key: str | None = None,
@@ -1092,19 +1119,23 @@ class Table:
         extra_summary: dict | None = None,
         validate_from_sequence: int | None = None,
     ) -> Snapshot:
-        """Swap a set of data files for another (compaction / clustering /
-        MERGE). Manifests containing removed entries are rewritten; untouched
-        manifests are reused by reference — at scale only the affected
-        metadata is rewritten, like Iceberg's rewrite-manifests.
+        """The one commit that adds or removes files: swap ``removed_paths``
+        for the ``added`` entries (data and/or delete files) in one new
+        snapshot. The added entries form one new manifest at the end of
+        the list. Manifests containing removed entries are rewritten;
+        untouched manifests are reused by reference — at scale only the
+        affected metadata is rewritten, like Iceberg's rewrite-manifests.
+        With nothing removed (``append``, a merge-on-read merge) no
+        manifest is opened: the parent's list is reused whole.
 
         ``validate_from_sequence``: sequence number of the snapshot the
-        rewrite PLANNED/READ from. A merge-on-read delete file committed
+        commit PLANNED/READ from. A merge-on-read delete file committed
         concurrently (seq greater than this) passes the removed-paths
-        conflict check but no longer applies to the rewritten rows, whose
-        fresh seq exceeds the delete's — silently resurrecting deleted
-        rows (round-2 ADVICE #2). Iceberg guards this with
-        validateNoNewDeleteFiles; here the commit raises
-        CommitConflictError and the maintenance unit re-reads and retries."""
+        conflict check but no longer applies to the rewritten or
+        re-derived rows, whose fresh seq exceeds the delete's — silently
+        resurrecting deleted rows (round-2 ADVICE #2). Iceberg guards this
+        with validateNoNewDeleteFiles; here the commit raises
+        CommitConflictError and ``replan_on_conflict`` re-runs the unit."""
         removed = set(removed_paths)
         # Capture which entries need stamping BEFORE the commit loop: on a
         # lost CAS build() re-runs with a higher sid, and a one-shot
@@ -1123,7 +1154,7 @@ class Table:
             removed_entries: list[DataFile] = []
             seen_removed: set[str] = set()
             for m in parent.manifest_list if parent else []:
-                entries = read_manifest(self.root, m)
+                entries = read_manifest(self.root, m) if removed else []
                 hit = [e for e in entries if e.path in removed]
                 if not hit:
                     manifests.append(m)  # reuse untouched manifest file
@@ -1166,42 +1197,6 @@ class Table:
                         f"delete file {e.path} committed at seq {e.seq}; "
                         f"re-read and retry the unit"
                     )
-
-    def commit_new_entries(
-        self,
-        entries: list[DataFile],
-        operation: str = "append",
-        commit_key: str | None = None,
-        extra_summary: dict | None = None,
-        validate_from_sequence: int | None = None,
-    ) -> Snapshot:
-        """Commit already-written entries (data and/or delete files) as
-        one new manifest appended to the parent's list — the merge-on-
-        read commit shape (nothing removed, nothing rewritten).
-
-        ``validate_from_sequence``: sequence the caller PLANNED/READ at.
-        A merge-on-read commit whose appended rows were derived from a
-        read of the table (conditional MoR patches, semi/anti-joined
-        inserts) must fail if a delete file landed in between — the
-        re-appended rows' fresh seq would escape that delete and
-        silently resurrect deleted rows (round-4 ADVICE #1)."""
-        # restamped on every CAS attempt, not just the first (ADVICE #3)
-        unstamped = [e for e in entries if e.seq is None]
-
-        def build(meta: TableMetadata, sid: int):
-            for e in unstamped:
-                e.seq = sid
-            self._validate_no_new_deletes(
-                meta.current_snapshot(), validate_from_sequence, operation)
-            man = write_manifest(self.root, entries)
-            parent = meta.current_snapshot()
-            manifests = list(parent.manifest_list) if parent else []
-            manifests.append(man)
-            summary = _summary(meta, entries, [])
-            summary.update(extra_summary or {})
-            return manifests, summary
-
-        return self._commit(operation, build, commit_key)
 
     # -- scan planning ------------------------------------------------------
 
@@ -1652,25 +1647,16 @@ class Table:
         commit). Small by construction — one file unless told otherwise.
         An Arrow ``keys_df`` is written by the driver as one file, with no
         Spark job."""
-        staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
-        if isinstance(keys_df, pa.Table):
-            os.makedirs(staging)
-            _write_parquet(keys_df.select(key_cols), os.path.join(
-                staging, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"), key_cols)
-        else:
-            keys_df.select(*key_cols).coalesce(n_files).write.mode("overwrite") \
-                .parquet(staging)
-        rels = []
-        for fn in os.listdir(staging):
-            if not fn.endswith(".parquet"):
-                continue
-            rel = os.path.join("data", "_deletes", f"{uuid.uuid4().hex[:12]}-{fn}")
-            abs_dest = os.path.join(self.root, rel)
-            os.makedirs(os.path.dirname(abs_dest), exist_ok=True)
-            os.replace(os.path.join(staging, fn), abs_dest)
-            rels.append(rel)
-        shutil.rmtree(staging, ignore_errors=True)
-        entries = collect_entries(self.root, rels, stat_columns=list(key_cols))
+        def write(staging: str) -> None:
+            if isinstance(keys_df, pa.Table):
+                os.makedirs(staging)
+                _write_parquet(keys_df.select(key_cols), os.path.join(
+                    staging, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"), key_cols)
+            else:
+                keys_df.select(*key_cols).coalesce(n_files).write.mode("overwrite") \
+                    .parquet(staging)
+
+        entries = self._publish(write, "_deletes", {}, list(key_cols))
         for e in entries:
             e.content = "deletes"
             e.delete_keys = list(key_cols)

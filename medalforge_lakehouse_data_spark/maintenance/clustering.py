@@ -38,7 +38,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType, NumericType
 
 from medalforge_lakehouse_data_spark.format.metadata import ClusterLayout, cluster_layout
-from medalforge_lakehouse_data_spark.format.table import CommitConflictError, Table
+from medalforge_lakehouse_data_spark.format.table import Table, replan_on_conflict
 from medalforge_lakehouse_data_spark.functions.zorder import hilbert_index, normalize_to_bits
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
@@ -461,16 +461,18 @@ def cluster_rewrite(
     table.set_properties(new_props)
     # Read→rewrite must detect a MoR delete committed in between (the
     # rewritten rows' fresh seq would escape it — round-2 ADVICE #2):
-    # validate_from_sequence fails the commit, and the unit re-plans.
-    # Planning (file listing, bounds, boundaries) lives INSIDE the retry
-    # loop and the read is pinned to the planned entries: a live
-    # table.scan() here would fold a concurrently appended file's rows
-    # into the rewrite while removed_paths — captured at listing time —
-    # left that file referenced, duplicating its rows (round-3 ADVICE #2).
+    # validate_from_sequence fails the commit, and the unit re-plans
+    # (replan_on_conflict; a pinned snapshot_id has nothing newer to
+    # re-plan from, so its conflict reaches the caller). Planning (file
+    # listing, bounds, boundaries) lives INSIDE the unit and the read is
+    # pinned to the planned entries: a live table.scan() here would fold
+    # a concurrently appended file's rows into the rewrite while
+    # removed_paths — captured at listing time — left that file
+    # referenced, duplicating its rows (round-3 ADVICE #2).
     from medalforge_lakehouse_data_spark.format.table import parse_partition_field
 
-    mig_metrics: dict = {}
-    for attempt in range(5):
+    def rewrite():
+        mig_metrics: dict = {}
         all_files = table.files(snapshot_id, content="data")
         if mode == "incremental":
             files = [e for e in all_files if e.cluster != tag]
@@ -543,63 +545,59 @@ def cluster_rewrite(
         removed_paths = [e.path for e in files]
         if mode == "full" or len(files) == len(all_files):
             removed_paths += [d.path for d in table.delete_files(snapshot_id)]
-        try:
-            snap = table.rewrite_files(
-                removed_paths,
-                added,
-                operation="cluster",
-                commit_key=f"{job_id}:rewrite",
-                extra_summary={
-                    "job_id": job_id,
-                    "cluster_columns": list(columns),
-                    "curve": curve,
-                },
-                validate_from_sequence=plan_seq,
-            )
-            break
-        except CommitConflictError:
-            if attempt == 4 or snapshot_id is not None:
-                raise
-            continue  # re-read with the new deletes applied; orphans → GC
-    # Persist the boundary set (full-table layouts only): merges then
-    # re-key on the recorded boundaries instead of paying a keys-only
-    # percentile job per merge. Incremental runs cover only NEW files,
-    # whose boundaries do not describe the table — never record those.
-    # When a full rewrite completes WITHOUT recording a fresh boundary
-    # list (past the property cap, or bounds that are not JSON), all
-    # three records are cleared in the same step: stale properties would
-    # keep merges re-keying to a layout this rewrite just replaced
-    # (round-4 ADVICE #4). Merges then compute boundaries per merge.
-    if len(files) == len(all_files):
-        import json as _json
+        snap = table.rewrite_files(
+            removed_paths,
+            added,
+            operation="cluster",
+            commit_key=f"{job_id}:rewrite",
+            extra_summary={
+                "job_id": job_id,
+                "cluster_columns": list(columns),
+                "curve": curve,
+            },
+            validate_from_sequence=plan_seq,
+        )
+        # Persist the boundary set (full-table layouts only): merges then
+        # re-key on the recorded boundaries instead of paying a keys-only
+        # percentile job per merge. Incremental runs cover only NEW files,
+        # whose boundaries do not describe the table — never record those.
+        # When a full rewrite completes WITHOUT recording a fresh boundary
+        # list (past the property cap, or bounds that are not JSON), all
+        # three records are cleared in the same step: stale properties would
+        # keep merges re-keying to a layout this rewrite just replaced
+        # (round-4 ADVICE #4). Merges then compute boundaries per merge.
+        if len(files) == len(all_files):
+            import json as _json
 
-        try:
-            bounds_json = _json.dumps(
-                {c: [bounds[c][0], bounds[c][1]] for c in columns})
-        except TypeError:
-            bounds_json = None  # non-JSON bound type (e.g. date)
-        if bounds_json is None or len(bnds) > MAX_RECORDED_BOUNDARIES:
-            table.set_properties({"cluster.bounds": None,
-                                  "cluster.boundaries": None,
-                                  "cluster.boundaries-rows": None})
-        else:
-            table.set_properties({
-                "cluster.bounds": bounds_json,
-                "cluster.boundaries": ",".join(str(b) for b in bnds),
-                "cluster.boundaries-rows": str(snap.summary.get(
-                    "total_rows", sum(e.rows for e in added))),
-            })
-    dt = time.monotonic() - t0
-    return {
-        "job_id": job_id,
-        "snapshot_id": snap.snapshot_id,
-        "files_in": len(files),
-        "files_out": len(added),
-        "bytes_in": total_bytes,
-        "rows": sum(e.rows for e in added),
-        "seconds": dt,
-        "gb_per_min": (total_bytes / 1e9) / (dt / 60) if dt > 0 else 0.0,
-        "files_per_min": len(files) / (dt / 60) if dt > 0 else 0.0,
-        "curve": curve,
-        **mig_metrics,
-    }
+            try:
+                bounds_json = _json.dumps(
+                    {c: [bounds[c][0], bounds[c][1]] for c in columns})
+            except TypeError:
+                bounds_json = None  # non-JSON bound type (e.g. date)
+            if bounds_json is None or len(bnds) > MAX_RECORDED_BOUNDARIES:
+                table.set_properties({"cluster.bounds": None,
+                                      "cluster.boundaries": None,
+                                      "cluster.boundaries-rows": None})
+            else:
+                table.set_properties({
+                    "cluster.bounds": bounds_json,
+                    "cluster.boundaries": ",".join(str(b) for b in bnds),
+                    "cluster.boundaries-rows": str(snap.summary.get(
+                        "total_rows", sum(e.rows for e in added))),
+                })
+        dt = time.monotonic() - t0
+        return {
+            "job_id": job_id,
+            "snapshot_id": snap.snapshot_id,
+            "files_in": len(files),
+            "files_out": len(added),
+            "bytes_in": total_bytes,
+            "rows": sum(e.rows for e in added),
+            "seconds": dt,
+            "gb_per_min": (total_bytes / 1e9) / (dt / 60) if dt > 0 else 0.0,
+            "files_per_min": len(files) / (dt / 60) if dt > 0 else 0.0,
+            "curve": curve,
+            **mig_metrics,
+        }
+
+    return rewrite() if snapshot_id is not None else replan_on_conflict(rewrite)

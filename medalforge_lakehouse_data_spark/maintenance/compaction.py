@@ -26,7 +26,7 @@ import time
 from pyspark.sql import SparkSession
 
 from medalforge_lakehouse_data_spark.format.metadata import DataFile, cluster_layout
-from medalforge_lakehouse_data_spark.format.table import CommitConflictError, Table
+from medalforge_lakehouse_data_spark.format.table import Table, replan_on_conflict
 from medalforge_lakehouse_data_spark.maintenance.checkpoint import JobCheckpoint
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
@@ -107,13 +107,12 @@ def compact_deletes(
     if not dels:
         return {"job_id": job_id, "delete_files": 0, "files_in": 0,
                 "files_out": 0, "seconds": 0.0}
-    from medalforge_lakehouse_data_spark.format.table import CommitConflictError
 
-    for attempt in range(5):
+    def fold():
         plan_seq = table.metadata().last_sequence
         dels = table.delete_files()
         if not dels:
-            # a concurrent writer folded them between our retry attempts —
+            # a concurrent writer folded them between our re-plans —
             # nothing left to do; do NOT commit an empty rewrite snapshot
             return {"job_id": job_id, "delete_files": 0, "files_in": 0,
                     "files_out": 0, "seconds": round(time.monotonic() - t0, 3)}
@@ -150,29 +149,25 @@ def compact_deletes(
             added = table._write_data_files(spark, df, target_file_count=n_out,
                                             sort_within=sort_within)
             removed = [e.path for e in affected] + [d.path for d in dels]
-        try:
-            table.rewrite_files(
-                removed, added,
-                operation="compact-deletes",
-                commit_key=f"{job_id}:rewrite",
-                extra_summary={"job_id": job_id,
-                               "dropped_delete_files": len(dels)},
-                validate_from_sequence=plan_seq,
-            )
-            break
-        except CommitConflictError:
-            if attempt == 4:
-                raise
-            continue  # a new delete landed mid-fold: re-plan and retry
-    dt = time.monotonic() - t0
-    return {
-        "job_id": job_id,
-        "delete_files": len(dels),
-        "files_in": len(affected),
-        "files_out": len(added),
-        "rows": sum(e.rows for e in added),
-        "seconds": dt,
-    }
+        # a new delete landing mid-fold fails this commit: fold re-plans
+        table.rewrite_files(
+            removed, added,
+            operation="compact-deletes",
+            commit_key=f"{job_id}:rewrite",
+            extra_summary={"job_id": job_id,
+                           "dropped_delete_files": len(dels)},
+            validate_from_sequence=plan_seq,
+        )
+        return {
+            "job_id": job_id,
+            "delete_files": len(dels),
+            "files_in": len(affected),
+            "files_out": len(added),
+            "rows": sum(e.rows for e in added),
+            "seconds": time.monotonic() - t0,
+        }
+
+    return replan_on_conflict(fold)
 
 
 def compact(
@@ -225,26 +220,24 @@ def compact(
         # Read-then-commit must detect a MoR delete landing in between:
         # the rewrite's fresh seq would exceed the delete's, silently
         # resurrecting deleted rows (round-2 ADVICE #2). Capture the
-        # sequence we read AT, let rewrite_files validate, retry on loss.
-        for attempt in range(5):
+        # sequence we read AT, let rewrite_files validate, re-read on loss
+        # (the lost run's files are orphans for GC).
+        def rewrite():
             plan_seq = table.metadata().last_sequence
             # schema-evolution-safe: aligns files written under older versions
             df = table.read_entries(spark, files)
             added = table._write_data_files(spark, df, target_file_count=len(bins))
-            try:
-                table.rewrite_files(
-                    [f.path for f in files],
-                    added,
-                    operation="compact",
-                    commit_key=f"{job_id}:{unit}",
-                    extra_summary={"job_id": job_id},
-                    validate_from_sequence=plan_seq,
-                )
-                break
-            except CommitConflictError:
-                if attempt == 4:
-                    raise
-                continue  # re-read with the new deletes applied; old files orphaned → GC
+            table.rewrite_files(
+                [f.path for f in files],
+                added,
+                operation="compact",
+                commit_key=f"{job_id}:{unit}",
+                extra_summary={"job_id": job_id},
+                validate_from_sequence=plan_seq,
+            )
+            return added
+
+        added = replan_on_conflict(rewrite)
         rows = sum(e.rows for e in added)
         nbytes = sum(f.bytes for f in files)
         ckpt.mark_done(unit, files=len(files), files_out=len(added), rows=rows, bytes=nbytes)

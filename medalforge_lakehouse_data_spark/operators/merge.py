@@ -35,8 +35,9 @@ From-scratch execution over our table format:
      count, the duplicate-key check and the delete keys come from that
      table, and the driver writes both files with pyarrow in the layout
      the Spark writer makes (``Table._write_data_files``). Either way one
-     atomic snapshot with an idempotency key; a delete file committed
-     after the plan re-runs plan → delta → write → commit."""
+     ``rewrite_files`` snapshot with an idempotency key (merge-on-read
+     removes nothing); a delete file committed after the plan re-runs
+     plan → delta → write → commit (``replan_on_conflict``)."""
 
 from __future__ import annotations
 
@@ -52,11 +53,11 @@ from pyspark.sql import functions as F
 
 from medalforge_lakehouse_data_spark.format.metadata import cluster_layout
 from medalforge_lakehouse_data_spark.format.table import (
-    CommitConflictError,
     Table,
     layout_columns,
     parse_partition_field,
     partition_field_expr,
+    replan_on_conflict,
 )
 from medalforge_lakehouse_data_spark.maintenance.clustering import write_clustered
 from medalforge_lakehouse_data_spark.operators.skew import salted_join
@@ -71,9 +72,6 @@ ROWS_PER_FILE = 1_000_000
 # copy-on-write output file size outside a recorded cluster layout
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 DELETE_KEYS_PER_FILE = 5_000_000
-# plan → delta → write → commit attempts when a concurrent delete file
-# lands after the plan (CommitConflictError)
-MERGE_ATTEMPTS = 5
 # Merge-on-read upserts and deletes of at most this many source rows run
 # on the driver: one Arrow collect of the source is their only Spark job,
 # then pyarrow writes. Measured crossover, a MoR upsert of image rows
@@ -212,7 +210,8 @@ def merge_into(
         # when the profile saw no duplicate key
         distinct_keys = not conditional and profile["dk"] == src_count
         small = src_count <= BROADCAST_ROW_LIMIT
-        for attempt in range(MERGE_ATTEMPTS):
+
+        def unit():
             affected, prune, plan_seq, target = [], None, None, None
             if needs_target:
                 affected, prune, plan_seq = _plan_affected(table, source, keys, profile)
@@ -239,34 +238,30 @@ def merge_into(
                       "commit_key": commit_key or f"merge-{uuid.uuid4().hex}",
                       "extra_summary": summary, "validate_from_sequence": plan_seq}
             rekey = None
-            try:
-                if mor:
-                    added = []
-                    if dkeys is not None:
-                        if not distinct_keys and local is None:
-                            dkeys = dkeys.distinct()
-                        added += table._write_delete_files(
-                            spark, dkeys, keys,
-                            n_files=max(1, math.ceil(src_count / DELETE_KEYS_PER_FILE)))
-                    if new_rows is not None:
-                        added += table._write_data_files(
-                            spark, new_rows,
-                            target_file_count=max(1, math.ceil(src_count / ROWS_PER_FILE)))
-                    snap = table.commit_new_entries(added, **commit)
-                else:
-                    kept = None
-                    if affected:
-                        kept = (target if dkeys is None
-                                else _anti_join(target, dkeys, keys, small, n_salts))
-                    rows = [df for df in (kept, new_rows) if df is not None]
-                    added, rekey = _write_rewrite(
-                        table, spark, reduce(DataFrame.unionByName, rows) if rows else None,
-                        affected, src_count, keys, cols, source, profile)
-                    snap = table.rewrite_files([e.path for e in affected], added, **commit)
-            except CommitConflictError:
-                if attempt == MERGE_ATTEMPTS - 1:
-                    raise
-                continue
+            if mor:
+                added = []
+                if dkeys is not None:
+                    if not distinct_keys and local is None:
+                        dkeys = dkeys.distinct()
+                    added += table._write_delete_files(
+                        spark, dkeys, keys,
+                        n_files=max(1, math.ceil(src_count / DELETE_KEYS_PER_FILE)))
+                if new_rows is not None:
+                    added += table._write_data_files(
+                        spark, new_rows,
+                        target_file_count=max(1, math.ceil(src_count / ROWS_PER_FILE)))
+                removed = []
+            else:
+                kept = None
+                if affected:
+                    kept = (target if dkeys is None
+                            else _anti_join(target, dkeys, keys, small, n_salts))
+                rows = [df for df in (kept, new_rows) if df is not None]
+                added, rekey = _write_rewrite(
+                    table, spark, reduce(DataFrame.unionByName, rows) if rows else None,
+                    affected, src_count, keys, cols, source, profile)
+                removed = [e.path for e in affected]
+            snap = table.rewrite_files(removed, added, **commit)
             return {
                 "snapshot_id": snap.snapshot_id,
                 "source_rows": src_count,
@@ -280,6 +275,8 @@ def merge_into(
                 "bucket_prune": (prune or {}).get("bucket_prune"),
                 "seconds": time.monotonic() - t0,
             }
+
+        return replan_on_conflict(unit)
     finally:
         for df in cached:
             df.unpersist()

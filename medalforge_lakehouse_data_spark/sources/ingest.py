@@ -260,24 +260,27 @@ def ingest_batch(
         # cache before touching _corrupt_record: Spark forbids predicates on
         # the corrupt-record column over raw files (QUERY_ONLY_CORRUPT_RECORD)
         df = _reader(spark, fmt, schema, reader_options or {}).load(files).cache()
-        if spec.supports_corrupt_record:
-            good = df.filter(F.col(_CORRUPT).isNull()).drop(_CORRUPT)
-            bad = df.filter(F.col(_CORRUPT).isNotNull())
-        else:
-            good, bad = df, df.limit(0)
-        good = add_audit_columns(good)
-        if bad_records_table is not None:
-            bad_rows = bad.select(
-                F.input_file_name().alias("source_file"),
-                F.col(_CORRUPT).alias("record"),
-                F.current_timestamp().alias("captured_ts"),
-            )
-            k_bad = bad_rows.count()
-            if k_bad:
-                bad_records_table.append(spark, bad_rows, commit_key=f"bad-{batch_key}")
-        else:
-            k_bad = bad.count()
-        snap = table.append(spark, good, commit_key=f"ingest-{batch_key}")
+        try:
+            if spec.supports_corrupt_record:
+                good = df.filter(F.col(_CORRUPT).isNull()).drop(_CORRUPT)
+                bad = df.filter(F.col(_CORRUPT).isNotNull())
+            else:
+                good, bad = df, df.limit(0)
+            good = add_audit_columns(good)
+            if bad_records_table is not None:
+                bad_rows = bad.select(
+                    F.input_file_name().alias("source_file"),
+                    F.col(_CORRUPT).alias("record"),
+                    F.current_timestamp().alias("captured_ts"),
+                )
+                k_bad = bad_rows.count()
+                if k_bad:
+                    bad_records_table.append(spark, bad_rows, commit_key=f"bad-{batch_key}")
+            else:
+                k_bad = bad.count()
+            snap = table.append(spark, good, commit_key=f"ingest-{batch_key}")
+        finally:
+            df.unpersist()
         ledger.add(files)
         ledger.clear_pending()
         n_files += len(files)

@@ -444,7 +444,7 @@ def test_driver_write_matches_spark_write(session, tmp_path, monkeypatch):
             added = (t._write_data_files(spark, src, target_file_count=1)
                      + t._write_delete_files(spark, src, ["k", "s"]))
         views[side] = sorted((e.content, _file_view(e)) for e in added)
-        t.commit_new_entries(added)
+        t.rewrite_files([], added, operation="append")
         scans[side] = _rows(t.scan(spark))
         before = t.current_snapshot_id()
         merge_into(t, upd, ["k"], spark, strategy="merge-on-read")

@@ -2,7 +2,6 @@
 
 * ingest exactly-once across a crash between append and ledger update
   while NEW files arrive (pending write-ahead record)
-* CommitLock: atomic stale takeover + ownership-checked release
 * deduplicate(strategy='agg') falls back to the window strategy for
   nulls-qualified order_by (min_by/max_by skip nulls)
 * IVF centroid training is not partition-biased (seeded Bernoulli
@@ -13,7 +12,6 @@
 from __future__ import annotations
 
 import os
-import time
 
 import numpy as np
 import pytest
@@ -26,7 +24,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from medalforge_lakehouse_data_spark.format.metadata import CommitLock
 from medalforge_lakehouse_data_spark.format.table import Table
 from medalforge_lakehouse_data_spark.operators import ann
 from medalforge_lakehouse_data_spark.operators.etl_core import deduplicate
@@ -97,32 +94,6 @@ def test_ingest_replays_pending_batch_after_crash(spark, tmp_path, monkeypatch):
     res2 = ingest.ingest_batch(spark, str(src), "csv", CSV_SCHEMA, t, ckpt,
                                reader_options=opts)
     assert res2.skipped and t.scan(spark).count() == 3
-
-
-def test_commit_lock_stale_takeover_and_ownership(tmp_path):
-    root = str(tmp_path)
-    lock_path = os.path.join(root, "metadata", ".commit.lock")
-    os.makedirs(os.path.dirname(lock_path))
-    # a crashed writer's stale lock
-    with open(lock_path, "w") as f:
-        f.write("999999:deadbeef")
-    past = time.time() - 3600
-    os.utime(lock_path, (past, past))
-    with CommitLock(root, timeout_s=2.0, stale_s=60.0):
-        # takeover succeeded; the lock now holds OUR token
-        with open(lock_path) as f:
-            assert f.read() != "999999:deadbeef"
-    assert not os.path.exists(lock_path)
-
-    # ownership check: if a thief replaced the lock mid-commit, __exit__
-    # must NOT delete the thief's lock
-    lk = CommitLock(root, timeout_s=2.0)
-    lk.__enter__()
-    with open(lock_path, "w") as f:
-        f.write("thief:token")
-    lk.__exit__(None, None, None)
-    assert os.path.exists(lock_path), "released a lock we no longer own"
-    os.unlink(lock_path)
 
 
 def test_dedup_agg_null_ordering_matches_window(spark):

@@ -241,8 +241,8 @@ for i in range(n):
                   "val": pa.array([f"w{{wid}}_{{i}}"])}}),
         os.path.join(root, rel))
     [entry] = collect_entries(root, [rel], stat_columns=["k", "val"])
-    t.commit_new_entries([entry], operation="append",
-                         commit_key=f"w{{wid}}:{{i}}")
+    t.rewrite_files([], [entry], operation="append",
+                    commit_key=f"w{{wid}}:{{i}}")
 print("OK")
 """
 

@@ -1,6 +1,6 @@
 """Round-5 regression tests (round-4 VERDICT items + ADVICE fixes):
 
-1. commit_new_entries validates against concurrently-landed delete
+1. an add-only rewrite_files commit validates against concurrently-landed delete
    files (ADVICE #1 — conditional merge-on-read could resurrect
    deleted rows); the conditional-MoR unit retries and converges.
 2. Merge re-key boundaries when no boundary list is recorded (past
@@ -80,10 +80,10 @@ def test_commit_new_entries_rejects_concurrent_delete(spark, tmp_path):
                when_matched="delete", when_not_matched=None,
                strategy="merge-on-read")
     with pytest.raises(CommitConflictError):
-        t.commit_new_entries(added, operation="merge",
-                             validate_from_sequence=plan_seq)
+        t.rewrite_files([], added, operation="merge",
+                        validate_from_sequence=plan_seq)
     # without the guard the same commit goes through (append semantics)
-    t.commit_new_entries(added, operation="merge")
+    t.rewrite_files([], added, operation="merge")
 
 
 def test_conditional_mor_merge_does_not_resurrect_deleted_rows(

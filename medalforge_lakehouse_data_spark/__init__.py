@@ -9,8 +9,8 @@ Layout:
                 Z-order/Hilbert interleave, text analysis, similarity
   operators/    DataFrame operators: ETL core, quality checks, MERGE INTO,
                 dedup family, ANN search, skew-salted joins, multimodal
-  maintenance/  compaction, clustering rewrite, manifest rewrite, snapshot
-                expiry + GC, per-partition lineage checkpoints
+  maintenance/  compaction, clustering rewrite, transcode, manifest
+                rewrite, snapshot expiry + GC, one resumable rewrite unit
   sources/      incremental file ingest (Auto-Loader-style ledger)
   plans/        data contracts (bronze JSON / silver YAML)
   customs/      sandboxed user-plugin transform layer

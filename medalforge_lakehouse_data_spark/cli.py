@@ -101,7 +101,7 @@ def cmd_maintenance(args) -> int:
     if args.job == "compact":
         out = compaction.compact(
             t, spark, target_file_bytes=args.target_file_bytes,
-            job_id=args.job_id, checkpoint_root=args.checkpoint_root,
+            job_id=args.job_id,
         )
     elif args.job == "cluster":
         out = clustering.cluster_rewrite(
@@ -190,7 +190,6 @@ def build_parser() -> argparse.ArgumentParser:
     m.add_argument("--kind", default="snapshots",
                    help="inspect kind: snapshots|history|refs|manifests|"
                         "files|delete_files")
-    m.add_argument("--checkpoint_root", default=None)
     m.set_defaults(fn=cmd_maintenance)
     return p
 

@@ -677,19 +677,9 @@ class Table:
 
     def set_properties(self, props: dict[str, str | None]) -> None:
         """ALTER TABLE SET TBLPROPERTIES parity (idempotent upsert).
-        A ``None`` value UNSETS the key (ALTER TABLE UNSET TBLPROPERTIES)
-        — used e.g. to drop stale ``cluster.boundaries*`` records when a
-        full rewrite replaces the layout without recording fresh ones."""
-
-        def mutate(meta):
-            for k, v in props.items():
-                if v is None:
-                    meta.properties.pop(k, None)
-                else:
-                    meta.properties[k] = v
-            return True, None
-
-        self._commit_metadata(mutate)
+        A ``None`` value UNSETS the key (ALTER TABLE UNSET TBLPROPERTIES).
+        Writes no metadata version when every value already holds."""
+        self._commit_metadata(lambda meta: (_apply_properties(meta, props), None))
 
     def update_partition_spec(self, new_spec: list[str]) -> None:
         """Evolve the partition spec of a LIVE table (Iceberg-style;
@@ -914,11 +904,23 @@ class Table:
                         content: str | None = None) -> list[DataFile]:
         if snap is None:
             return []
+        if content == "deletes":
+            return self._delete_entries(snap)
         out: list[DataFile] = []
         for m in snap.manifest_list:
             out.extend(read_manifest(self.root, m))
         if content is not None:
             out = [e for e in out if e.content == content]
+        return out
+
+    def _delete_entries(self, snap: Snapshot | None) -> list[DataFile]:
+        """The delete files of ``snap``, opening only the manifests whose
+        list entry counts ``delete_files`` (``write_manifest`` records the
+        count) plus legacy path-only entries, which carry no count."""
+        out: list[DataFile] = []
+        for m in snap.manifest_list if snap else []:
+            if isinstance(m, str) or m.get("delete_files"):
+                out.extend(e for e in read_manifest(self.root, m) if e.content == "deletes")
         return out
 
     def delete_files(self, snapshot_id: int | None = None) -> list[DataFile]:
@@ -1118,6 +1120,7 @@ class Table:
         commit_key: str | None = None,
         extra_summary: dict | None = None,
         validate_from_sequence: int | None = None,
+        properties: dict[str, str | None] | None = None,
     ) -> Snapshot:
         """The one commit that adds or removes files: swap ``removed_paths``
         for the ``added`` entries (data and/or delete files) in one new
@@ -1135,7 +1138,12 @@ class Table:
         re-derived rows, whose fresh seq exceeds the delete's — silently
         resurrecting deleted rows (round-2 ADVICE #2). Iceberg guards this
         with validateNoNewDeleteFiles; here the commit raises
-        CommitConflictError and ``replan_on_conflict`` re-runs the unit."""
+        CommitConflictError and ``replan_on_conflict`` re-runs the unit.
+
+        ``properties``: table-property upserts (``None`` unsets a key)
+        applied in the same metadata version as the file swap, e.g. the
+        layout a cluster rewrite records, and re-applied on every CAS
+        retry."""
         removed = set(removed_paths)
         # Capture which entries need stamping BEFORE the commit loop: on a
         # lost CAS build() re-runs with a higher sid, and a one-shot
@@ -1173,6 +1181,7 @@ class Table:
                 manifests.append(new_manifest)
             summary = _summary(meta, added, removed_entries)
             summary.update(extra_summary or {})
+            _apply_properties(meta, properties or {})
             return manifests, summary
 
         return self._commit(operation, build, commit_key)
@@ -1187,16 +1196,13 @@ class Table:
         driver-side check. No-op when ``from_seq`` is None."""
         if from_seq is None or parent is None:
             return
-        for m in parent.manifest_list:
-            if not isinstance(m, str) and not m.get("delete_files"):
-                continue
-            for e in read_manifest(self.root, m):
-                if e.content == "deletes" and (e.seq or 0) > from_seq:
-                    raise CommitConflictError(
-                        f"{operation} planned from seq {from_seq} but "
-                        f"delete file {e.path} committed at seq {e.seq}; "
-                        f"re-read and retry the unit"
-                    )
+        for e in self._delete_entries(parent):
+            if (e.seq or 0) > from_seq:
+                raise CommitConflictError(
+                    f"{operation} planned from seq {from_seq} but "
+                    f"delete file {e.path} committed at seq {e.seq}; "
+                    f"re-read and retry the unit"
+                )
 
     # -- scan planning ------------------------------------------------------
 
@@ -1533,8 +1539,7 @@ class Table:
         deletes: list[DataFile] = []
         if apply_deletes:
             min_seq = min((e.seq or 0) for e in entries)
-            deletes = [d for d in self._snapshot_files(meta.current_snapshot(),
-                                                       "deletes")
+            deletes = [d for d in self._delete_entries(meta.current_snapshot())
                        if (d.seq or 0) > min_seq]
         return self._read_aligned(spark, entries, meta.schema, meta, deletes=deletes)
 
@@ -1863,7 +1868,24 @@ def _summary(meta: TableMetadata, added: list[DataFile], removed: list[DataFile]
     if n_del:
         out["added_delete_files"] = n_del
         out["added_delete_rows"] = sum(e.rows for e in added if e.content == "deletes")
+    n_spent = sum(1 for e in removed if e.content == "deletes")
+    if n_spent:
+        out["removed_delete_files"] = n_spent
     return out
+
+
+def _apply_properties(meta: TableMetadata, props: dict[str, str | None]) -> bool:
+    """Upsert ``props`` into ``meta.properties`` in place (``None`` unsets
+    a key); True when any value changed."""
+    changed = False
+    for k, v in props.items():
+        if meta.properties.get(k) != v:
+            changed = True
+            if v is None:
+                meta.properties.pop(k)
+            else:
+                meta.properties[k] = v
+    return changed
 
 
 def _swap_pointer(root: str, version_name: str) -> None:

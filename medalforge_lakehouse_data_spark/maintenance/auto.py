@@ -21,13 +21,13 @@ Policy knobs (all optional):
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
 from medalforge_lakehouse_data_spark.format.metadata import cluster_layout
 from medalforge_lakehouse_data_spark.format.table import Table
+from medalforge_lakehouse_data_spark.maintenance.rewrite import default_job_id
 
 
 @dataclass
@@ -82,7 +82,7 @@ def maybe_maintain(
     from medalforge_lakehouse_data_spark.maintenance import clustering, compaction
 
     policy = policy or MaintenancePolicy()
-    job_id = job_id or f"auto-{int(time.time())}"
+    job_id = job_id or default_job_id("auto")
     out: dict = {"job_id": job_id, "compacted": False, "clustered": False}
 
     def _recluster_incremental(tag: str) -> None:

@@ -17,7 +17,9 @@ From-scratch equivalent:
      partition is sorted by the key (``write_clustered``). Each output
      file covers a disjoint curve range, so its per-column min/max boxes
      are tight → scan pruning on ANY clustered column works.
-  4. One atomic snapshot swaps all files (old snapshot still readable).
+  4. One atomic snapshot swaps the files and records the layout
+     (``cluster.*`` properties) in the same metadata version; the old
+     snapshot stays readable.
 
 A layout-preserving MERGE writes through the same ``write_clustered``,
 served the boundary list the last full rewrite recorded while it still
@@ -26,6 +28,7 @@ single routed one, sized by target file bytes."""
 
 from __future__ import annotations
 
+import json
 import math
 import time
 from typing import Sequence
@@ -37,9 +40,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType, NumericType
 
-from medalforge_lakehouse_data_spark.format.metadata import ClusterLayout, cluster_layout
-from medalforge_lakehouse_data_spark.format.table import Table, replan_on_conflict
+from medalforge_lakehouse_data_spark.format.metadata import (
+    ClusterLayout,
+    DataFile,
+    Snapshot,
+    TableMetadata,
+    cluster_layout,
+)
+from medalforge_lakehouse_data_spark.format.table import Table, parse_partition_field
 from medalforge_lakehouse_data_spark.functions.zorder import hilbert_index, normalize_to_bits
+from medalforge_lakehouse_data_spark.maintenance.rewrite import Plan, default_job_id, rewrite_unit
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -54,8 +64,13 @@ MAX_RECORDED_BOUNDARIES = 4096
 
 def column_bounds(table: Table, columns: Sequence[str], snapshot_id: int | None = None):
     """Global (min, max) per column from manifest stats — metadata only."""
+    return entry_bounds(table.files(snapshot_id), columns)
+
+
+def entry_bounds(entries: Sequence[DataFile], columns: Sequence[str]):
+    """(min, max) per column over the stats of ``entries``."""
     bounds: dict[str, list] = {c: [None, None] for c in columns}
-    for e in table.files(snapshot_id):
+    for e in entries:
         for c in columns:
             st = e.stats.get(c)
             if st is None or st.min is None:
@@ -415,13 +430,17 @@ def cluster_rewrite(
     partition values when present, column stats otherwise). Metrics
     report migrate_files/migrate_bytes/migrate_remaining_files.
 
-    Output files are tagged (DataFile.cluster) and the clustering spec
-    is recorded in table properties so MERGE can preserve the layout.
-    A curve other than zorder/hilbert, or a column the curve key cannot
-    key (not numeric; more than 3 for zorder), raises ValueError before
-    anything is recorded or read."""
+    Output files are tagged (DataFile.cluster), and the clustering spec
+    (``cluster.curve/columns/target-file-bytes``) is recorded in table
+    properties so MERGE can preserve the layout: in the rewrite's own
+    commit, or through ``set_properties`` when there is nothing to
+    rewrite, so a layout can be declared on an empty table. A full
+    rewrite records its boundary list in that commit too. A curve other
+    than zorder/hilbert, or a column the curve key cannot key (not
+    numeric; more than 3 for zorder), raises ValueError before anything
+    is recorded or read."""
     t0 = time.monotonic()
-    job_id = job_id or f"cluster-{int(time.time())}"
+    job_id = job_id or default_job_id("cluster")
     if mode not in ("full", "incremental"):
         raise ValueError(f"mode must be full|incremental, got {mode!r}")
     if curve not in ("zorder", "hilbert"):
@@ -443,80 +462,35 @@ def cluster_rewrite(
     # tie-breaker spreads equal-key rows across partitions while keeping
     # the curve order — per-file min/max bounds stay tight.
     non_binary = [f.name for f in schema.fields if f.dataType.typeName() != "binary"]
-    # record the layout so MERGE/compaction can preserve it (and for
-    # incremental re-clustering); property write precedes the data commit,
-    # which is the one guarded by commit_key. A (curve, columns) change
-    # clears the old config's bounds/boundary records in the same step —
-    # stale ones would otherwise be served under the new config's label
-    # until this job's final record lands (round-4 ADVICE #4 family).
-    old = cluster_layout(table.metadata().properties)
-    new_props: dict = {
-        "cluster.curve": curve,
-        "cluster.columns": ",".join(columns),
-        "cluster.target-file-bytes": str(target_file_bytes),
-    }
-    if old is not None and (old.columns != layout.columns or old.curve != curve):
-        new_props.update({"cluster.bounds": None, "cluster.boundaries": None,
-                          "cluster.boundaries-rows": None})
-    table.set_properties(new_props)
-    # Read→rewrite must detect a MoR delete committed in between (the
-    # rewritten rows' fresh seq would escape it — round-2 ADVICE #2):
-    # validate_from_sequence fails the commit, and the unit re-plans
-    # (replan_on_conflict; a pinned snapshot_id has nothing newer to
-    # re-plan from, so its conflict reaches the caller). Planning (file
-    # listing, bounds, boundaries) lives INSIDE the unit and the read is
-    # pinned to the planned entries: a live table.scan() here would fold
-    # a concurrently appended file's rows into the rewrite while
-    # removed_paths — captured at listing time — left that file
-    # referenced, duplicating its rows (round-3 ADVICE #2).
-    from medalforge_lakehouse_data_spark.format.table import parse_partition_field
+    extras: dict = {"curve": curve}
+    chosen: dict = {}
 
-    def rewrite():
-        mig_metrics: dict = {}
-        all_files = table.files(snapshot_id, content="data")
+    def plan(meta: TableMetadata, snap: Snapshot | None) -> Plan | None:
+        # the layout record lands with the data swap; a (curve, columns)
+        # change also clears the old config's boundary records, which
+        # would otherwise be served under the new config's label
+        old = cluster_layout(meta.properties)
+        chosen["props"] = {"cluster.curve": curve,
+                           "cluster.columns": ",".join(columns),
+                           "cluster.target-file-bytes": str(target_file_bytes)}
+        if old is not None and (old.columns != layout.columns or old.curve != curve):
+            chosen["props"].update(_NO_BOUNDARY_RECORD)
+        entries = table.files(snap.snapshot_id) if snap is not None else []
+        all_files = [e for e in entries if e.content == "data"]
+        files = all_files
         if mode == "incremental":
             files = [e for e in all_files if e.cluster != tag]
             if migrate_spec:
-                cur_fields = {parse_partition_field(p)[0]
-                              for p in table.metadata().partition_spec}
-                stale = [e for e in all_files
-                         if e.cluster == tag
-                         and set(e.partition or {}) != cur_fields]
-                if migrate_max_bytes and stale:
-                    stale.sort(key=lambda e: (e.seq or 0, e.path))
-                    acc, take = 0, []
-                    for e in stale:
-                        if take and acc + e.bytes > migrate_max_bytes:
-                            break
-                        take.append(e)
-                        acc += e.bytes
-                    mig_metrics = {
-                        "migrate_files": len(take),
-                        "migrate_bytes": acc,
-                        "migrate_remaining_files": len(stale) - len(take),
-                    }
-                    stale = take
-                else:
-                    mig_metrics = {
-                        "migrate_files": len(stale),
-                        "migrate_bytes": sum(e.bytes for e in stale),
-                        "migrate_remaining_files": 0,
-                    }
-                files += stale
+                files += _stale_spec_files(all_files, tag, meta, migrate_max_bytes, extras)
             if len(files) < min_input_files:
-                return {"job_id": job_id, "files_in": 0, "files_out": 0,
-                        "skipped": len(files), "seconds": 0.0, **mig_metrics}
-        else:
-            files = all_files
+                extras["skipped"] = len(files)
+                return None
         if not files:
-            return {"job_id": job_id, "files_in": 0, "files_out": 0,
-                    "seconds": 0.0}
-        total_bytes = sum(e.bytes for e in files)
-        n_out = max(1, math.ceil(total_bytes / target_file_bytes))
-        # global bounds from ALL files (incremental output must share the
-        # full-table normalization so runs overlay consistently)
-        bounds = column_bounds(table, columns, snapshot_id)
-        # numeric bounds required; fall back to a distributed agg if absent
+            return None
+        # global bounds from ALL entries (incremental output must share
+        # the full-table normalization so runs overlay consistently);
+        # numeric bounds required, a distributed agg fills missing ones
+        bounds = entry_bounds(entries, columns)
         missing = [c for c in columns if bounds[c][0] is None]
         if missing:
             agg = table.read_entries(spark, all_files).agg(
@@ -525,79 +499,88 @@ def cluster_rewrite(
             ).collect()[0]
             for c in missing:
                 bounds[c] = (agg[f"mn_{c}"], agg[f"mx_{c}"])
-        plan_seq = (snapshot_id if snapshot_id is not None
-                    else table.metadata().last_sequence)
-        # schema-evolution-safe entry-pinned read (full mode included):
-        # aligns files written under older versions and still applies
-        # deletes newer than the planned entries
-        df = table.read_entries(spark, files)
+        chosen.update(bounds=bounds, full=len(files) == len(all_files))
+        # a full rewrite replaces every data file and its read applies
+        # every equality delete: the delete files are spent and go in the
+        # same commit (merge-on-read cleanup)
+        spent = ([e for e in entries if e.content == "deletes"]
+                 if mode == "full" or chosen["full"] else [])
+        return Plan(files, spent)
+
+    def write(rows, files):
+        n_out = max(1, math.ceil(sum(e.bytes for e in files) / target_file_bytes))
         # Boundaries from a keys-only pass (cluster columns pruned at the
         # parquet scan — the image blobs are never read), then ONE full
         # pass to shuffle+sort+write. repartitionByRange would execute the
         # full plan twice (its sampler re-evaluates the child), which both
         # doubled the rewrite cost and was the fixed sampling cost that
         # capped cluster-stage scaling (round-2 TODO #9).
-        added, bnds, _ = write_clustered(table, spark, df, layout, non_binary, n_out,
-                                         lambda: df.select(*columns), bounds=bounds)
-        # a FULL rewrite replaces every data file; the scan that produced the
-        # rows applied all equality deletes, so the delete files are spent —
-        # drop them in the same atomic commit (merge-on-read cleanup)
-        removed_paths = [e.path for e in files]
-        if mode == "full" or len(files) == len(all_files):
-            removed_paths += [d.path for d in table.delete_files(snapshot_id)]
-        snap = table.rewrite_files(
-            removed_paths,
-            added,
-            operation="cluster",
-            commit_key=f"{job_id}:rewrite",
-            extra_summary={
-                "job_id": job_id,
-                "cluster_columns": list(columns),
-                "curve": curve,
-            },
-            validate_from_sequence=plan_seq,
-        )
-        # Persist the boundary set (full-table layouts only): merges then
-        # re-key on the recorded boundaries instead of paying a keys-only
-        # percentile job per merge. Incremental runs cover only NEW files,
-        # whose boundaries do not describe the table — never record those.
-        # When a full rewrite completes WITHOUT recording a fresh boundary
-        # list (past the property cap, or bounds that are not JSON), all
-        # three records are cleared in the same step: stale properties would
-        # keep merges re-keying to a layout this rewrite just replaced
-        # (round-4 ADVICE #4). Merges then compute boundaries per merge.
-        if len(files) == len(all_files):
-            import json as _json
+        added, bnds, _ = write_clustered(table, spark, rows, layout, non_binary, n_out,
+                                         lambda: rows.select(*columns),
+                                         bounds=chosen["bounds"])
+        props = dict(chosen["props"])
+        if chosen["full"]:
+            props.update(_boundary_record(chosen["bounds"], columns, bnds,
+                                          sum(e.rows for e in added)))
+        return added, props
 
-            try:
-                bounds_json = _json.dumps(
-                    {c: [bounds[c][0], bounds[c][1]] for c in columns})
-            except TypeError:
-                bounds_json = None  # non-JSON bound type (e.g. date)
-            if bounds_json is None or len(bnds) > MAX_RECORDED_BOUNDARIES:
-                table.set_properties({"cluster.bounds": None,
-                                      "cluster.boundaries": None,
-                                      "cluster.boundaries-rows": None})
-            else:
-                table.set_properties({
-                    "cluster.bounds": bounds_json,
-                    "cluster.boundaries": ",".join(str(b) for b in bnds),
-                    "cluster.boundaries-rows": str(snap.summary.get(
-                        "total_rows", sum(e.rows for e in added))),
-                })
-        dt = time.monotonic() - t0
-        return {
-            "job_id": job_id,
-            "snapshot_id": snap.snapshot_id,
-            "files_in": len(files),
-            "files_out": len(added),
-            "bytes_in": total_bytes,
-            "rows": sum(e.rows for e in added),
-            "seconds": dt,
-            "gb_per_min": (total_bytes / 1e9) / (dt / 60) if dt > 0 else 0.0,
-            "files_per_min": len(files) / (dt / 60) if dt > 0 else 0.0,
-            "curve": curve,
-            **mig_metrics,
-        }
+    # Read→rewrite must detect a MoR delete committed in between (the
+    # rewritten rows' fresh seq would escape it — round-2 ADVICE #2); the
+    # unit reads exactly the planned entries, so a concurrently appended
+    # file is neither read nor removed (round-3 ADVICE #2).
+    rec = rewrite_unit(table, spark, "cluster", job_id, f"{job_id}:rewrite", plan, write,
+                       snapshot_id=snapshot_id,
+                       extra_summary={"cluster_columns": list(columns), "curve": curve},
+                       t0=t0)
+    if rec["snapshot_id"] is None:
+        table.set_properties(chosen["props"])
+    return {**rec, **extras}
 
-    return rewrite() if snapshot_id is not None else replan_on_conflict(rewrite)
+
+# the three records of a full rewrite's boundary list, unset
+_NO_BOUNDARY_RECORD = dict.fromkeys(
+    ("cluster.bounds", "cluster.boundaries", "cluster.boundaries-rows"))
+
+
+def _boundary_record(bounds: dict, columns: Sequence[str], boundaries: list[int],
+                     rows: int) -> dict:
+    """The boundary list a full rewrite records, so merges re-key on it
+    instead of paying a keys-only percentile job per merge. Incremental
+    runs cover only NEW files, whose boundaries do not describe the
+    table, and never record one. Past ``MAX_RECORDED_BOUNDARIES``, or
+    with bounds that are not JSON (e.g. dates), all three records are
+    cleared instead: stale ones would keep merges re-keying to the
+    layout this rewrite replaced (round-4 ADVICE #4), so merges compute
+    boundaries per merge."""
+    try:
+        bounds_json = json.dumps({c: [bounds[c][0], bounds[c][1]] for c in columns})
+    except TypeError:
+        return dict(_NO_BOUNDARY_RECORD)
+    if len(boundaries) > MAX_RECORDED_BOUNDARIES:
+        return dict(_NO_BOUNDARY_RECORD)
+    return {"cluster.bounds": bounds_json,
+            "cluster.boundaries": ",".join(str(b) for b in boundaries),
+            "cluster.boundaries-rows": str(rows)}
+
+
+def _stale_spec_files(all_files: list[DataFile], tag: dict, meta: TableMetadata,
+                      max_bytes: int | None, extras: dict) -> list[DataFile]:
+    """Clustered files recorded under an older partition spec, oldest
+    first and capped at ``max_bytes`` (at least one file); sets the
+    ``migrate_*`` extras."""
+    cur_fields = {parse_partition_field(p)[0] for p in meta.partition_spec}
+    stale = [e for e in all_files
+             if e.cluster == tag and set(e.partition or {}) != cur_fields]
+    take = stale
+    if max_bytes and stale:
+        stale.sort(key=lambda e: (e.seq or 0, e.path))
+        acc, take = 0, []
+        for e in stale:
+            if take and acc + e.bytes > max_bytes:
+                break
+            take.append(e)
+            acc += e.bytes
+    extras.update(migrate_files=len(take),
+                  migrate_bytes=sum(e.bytes for e in take),
+                  migrate_remaining_files=len(stale) - len(take))
+    return take

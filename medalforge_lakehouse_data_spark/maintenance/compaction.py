@@ -10,24 +10,35 @@ here it is a first-class from-scratch job, per BASELINE.json north_star:
      no data read. Each bin becomes one output file.
   3. REWRITE: per partition, one distributed job reads the selected
      files and writes ``len(bins)`` evenly-ranged output files.
-  4. COMMIT: one atomic snapshot per partition (commit_key =
-     job_id:partition), checkpointed — a killed run resumes at the next
-     partition with no duplicate commits.
+  4. COMMIT: one atomic snapshot per partition through one
+     ``rewrite_unit`` (commit_key = job_id:part:<values>). The commit log
+     is the resume ledger: a re-run of a killed job re-plans from the
+     snapshot the job started on and skips every unit whose key is
+     already committed, so no unit commits twice.
 
 Readers pinned to the pre-compaction snapshot see identical rows
 throughout (snapshot isolation)."""
 
 from __future__ import annotations
 
-import os
-import threading
 import time
 
 from pyspark.sql import SparkSession
 
-from medalforge_lakehouse_data_spark.format.metadata import DataFile, cluster_layout
-from medalforge_lakehouse_data_spark.format.table import Table, replan_on_conflict
-from medalforge_lakehouse_data_spark.maintenance.checkpoint import JobCheckpoint
+from medalforge_lakehouse_data_spark.format.metadata import (
+    DataFile,
+    Snapshot,
+    TableMetadata,
+    cluster_layout,
+)
+from medalforge_lakehouse_data_spark.format.table import Table
+from medalforge_lakehouse_data_spark.maintenance.clustering import entry_bounds, with_curve_key
+from medalforge_lakehouse_data_spark.maintenance.rewrite import (
+    Plan,
+    default_job_id,
+    rewrite_unit,
+    unit_record,
+)
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 # partitions ``compact`` rewrites at once, one Spark job per thread
@@ -100,74 +111,66 @@ def compact_deletes(
     (b) overlap its key range (per-file stats) are rewritten; the output
     carries fresh seqs, so the deletes no longer apply to it and are
     removed in the same atomic commit. Cost is O(delete-affected bytes),
-    not table size."""
+    not table size. Returns the unit record; ``delete_files`` counts the
+    delete files folded."""
     t0 = time.monotonic()
-    job_id = job_id or f"compact-deletes-{int(time.time())}"
-    dels = table.delete_files()
-    if not dels:
-        return {"job_id": job_id, "delete_files": 0, "files_in": 0,
-                "files_out": 0, "seconds": 0.0}
+    job_id = job_id or default_job_id("compact-deletes")
+    sort: dict = {}
 
-    def fold():
-        plan_seq = table.metadata().last_sequence
-        dels = table.delete_files()
+    def plan(meta: TableMetadata, snap: Snapshot | None) -> Plan | None:
+        # no delete files (or a concurrent writer folded them between our
+        # re-plans): nothing to do, and no empty rewrite snapshot
+        dels = table._delete_entries(snap)
         if not dels:
-            # a concurrent writer folded them between our re-plans —
-            # nothing left to do; do NOT commit an empty rewrite snapshot
-            return {"job_id": job_id, "delete_files": 0, "files_in": 0,
-                    "files_out": 0, "seconds": round(time.monotonic() - t0, 3)}
-        data = table.files(content="data")
-        affected = [e for e in data if any(_overlaps_delete(e, d) for d in dels)]
-        if not affected:
-            # deletes that touch nothing are spent by definition
-            removed = [d.path for d in dels]
-            added: list[DataFile] = []
-        else:
-            df = table.read_entries(spark, affected)  # applies the deletes
-            n_out = max(1, round(sum(e.bytes for e in affected) / target_file_bytes))
-            # The output is written UNTAGGED (the fold may drop rows, so
-            # the inputs' curve tags no longer certify the layout);
-            # auto-maintenance runs an incremental cluster pass right
-            # after a fold to restore it. Range-sorting on the recorded
-            # curve keeps per-file bounds tight in the interim — the
-            # repartitionByRange double-execution this implies is fine
-            # HERE because the fold input is O(delete-affected bytes),
-            # not table-sized (merge/cluster use the one-pass range write
-            # instead).
-            layout = cluster_layout(table.metadata().properties)
-            sort_within = None
-            if layout is not None and all(c in df.columns for c in layout.columns):
-                from medalforge_lakehouse_data_spark.maintenance.clustering import (
-                    column_bounds,
-                    with_curve_key,
-                )
+            return None
+        entries = table.files(snap.snapshot_id)
+        # deletes that touch nothing are spent by definition: then the
+        # plan holds no data and the commit only drops them
+        affected = [e for e in entries if e.content == "data"
+                    and any(_overlaps_delete(e, d) for d in dels)]
+        layout = cluster_layout(meta.properties)
+        sort.clear()
+        if layout is not None:
+            bounds = entry_bounds(entries, layout.columns)
+            if all(bounds[c][0] is not None for c in layout.columns):
+                sort.update(layout=layout, bounds=bounds)
+        return Plan(affected, dels)
 
-                bounds = column_bounds(table, layout.columns)
-                if all(bounds[c][0] is not None for c in layout.columns):
-                    df = with_curve_key(df, layout.columns, bounds, layout.curve)
-                    sort_within = ["_zkey"]
-            added = table._write_data_files(spark, df, target_file_count=n_out,
-                                            sort_within=sort_within)
-            removed = [e.path for e in affected] + [d.path for d in dels]
-        # a new delete landing mid-fold fails this commit: fold re-plans
-        table.rewrite_files(
-            removed, added,
-            operation="compact-deletes",
-            commit_key=f"{job_id}:rewrite",
-            extra_summary={"job_id": job_id,
-                           "dropped_delete_files": len(dels)},
-            validate_from_sequence=plan_seq,
-        )
-        return {
-            "job_id": job_id,
-            "delete_files": len(dels),
-            "files_in": len(affected),
-            "files_out": len(added),
-            "rows": sum(e.rows for e in added),
-            "seconds": time.monotonic() - t0,
-        }
+    def write(rows, affected):
+        n_out = max(1, round(sum(e.bytes for e in affected) / target_file_bytes))
+        # The output is written UNTAGGED (the fold may drop rows, so the
+        # inputs' curve tags no longer certify the layout); auto-maintenance
+        # runs an incremental cluster pass right after a fold to restore
+        # it. Range-sorting on the recorded curve keeps per-file bounds
+        # tight in the interim — the repartitionByRange double-execution
+        # this implies is fine HERE because the fold input is
+        # O(delete-affected bytes), not table-sized (merge/cluster use the
+        # one-pass range write instead).
+        sort_within = None
+        layout = sort.get("layout")
+        if layout is not None and all(c in rows.columns for c in layout.columns):
+            rows = with_curve_key(rows, layout.columns, sort["bounds"], layout.curve)
+            sort_within = ["_zkey"]
+        return table._write_data_files(spark, rows, target_file_count=n_out,
+                                       sort_within=sort_within), None
 
-    return replan_on_conflict(fold)
+    # the read applies the deletes; a new delete landing mid-fold fails
+    # the commit and the unit re-plans
+    return rewrite_unit(table, spark, "compact-deletes", job_id, f"{job_id}:rewrite",
+                        plan, write, t0=t0)
+
+
+def _job_start(meta: TableMetadata, job_id: str) -> Snapshot | None:
+    """The snapshot a compaction job plans from: the current one, or, when
+    the log already holds a commit of ``job_id`` (a re-run), the parent of
+    its first commit, so the re-run sees the same units."""
+    first = next((s for s in meta.snapshots
+                  if (s.commit_key or "").startswith(f"{job_id}:")), None)
+    if first is not None:
+        for s in meta.snapshots:
+            if s.snapshot_id == first.parent_id:
+                return s
+    return meta.current_snapshot()
 
 
 def compact(
@@ -176,27 +179,16 @@ def compact(
     target_file_bytes: int = DEFAULT_TARGET_BYTES,
     min_file_bytes: int | None = None,
     job_id: str | None = None,
-    checkpoint_root: str | None = None,
 ) -> dict:
-    """Run compaction; returns metrics. Resumable via (job_id,
-    checkpoint_root): completed partitions are skipped on re-run and the
-    table-level commit_key makes each partition commit idempotent."""
+    """Run compaction; returns the unit record summed over the units this
+    call committed, plus ``partitions``, ``skipped_units`` (units already
+    in the commit log) and ``dropped_delete_files``. Re-running a job id
+    resumes it: the commit keys are the only ledger."""
     t0 = time.monotonic()
-    job_id = job_id or f"compact-{int(time.time())}"
-    ckpt = JobCheckpoint(
-        checkpoint_root or os.path.join(table.root, "_checkpoints"), job_id
-    )
-    plan = plan_compaction(table, target_file_bytes, min_file_bytes)
-    metrics = {
-        "job_id": job_id,
-        "partitions": len(plan),
-        "files_in": 0,
-        "files_out": 0,
-        "bytes_in": 0,
-        "rows": 0,
-        "skipped_units": 0,
-    }
-    schema = table.schema
+    job_id = job_id or default_job_id("compact")
+    start = _job_start(table.metadata(), job_id)
+    plan = plan_compaction(table, target_file_bytes, min_file_bytes,
+                           snapshot_id=start.snapshot_id if start else None)
     # Small-file reads: compaction input is MANY tiny files by definition;
     # Spark's default 128MB/4MB file binning packs them into a handful of
     # input splits, serializing the read that feeds the rewrite shuffle
@@ -206,46 +198,19 @@ def compact(
     prev_oc = spark.conf.get("spark.sql.files.openCostInBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
     spark.conf.set("spark.sql.files.openCostInBytes", str(256 * 1024))
-    lock = threading.Lock()
 
-    def run_unit(item):
+    def run_unit(item) -> dict:
         key, bins = item
         unit = "part:" + ",".join(f"{k}={v}" for k, v in key) if key else "part:_all"
         files = [f for b in bins for f in b]
-        if ckpt.is_done(unit):
-            with lock:
-                metrics["skipped_units"] += 1
-            return
-        ckpt.mark(unit, "running", files=len(files))
-        # Read-then-commit must detect a MoR delete landing in between:
-        # the rewrite's fresh seq would exceed the delete's, silently
-        # resurrecting deleted rows (round-2 ADVICE #2). Capture the
-        # sequence we read AT, let rewrite_files validate, re-read on loss
-        # (the lost run's files are orphans for GC).
-        def rewrite():
-            plan_seq = table.metadata().last_sequence
-            # schema-evolution-safe: aligns files written under older versions
-            df = table.read_entries(spark, files)
-            added = table._write_data_files(spark, df, target_file_count=len(bins))
-            table.rewrite_files(
-                [f.path for f in files],
-                added,
-                operation="compact",
-                commit_key=f"{job_id}:{unit}",
-                extra_summary={"job_id": job_id},
-                validate_from_sequence=plan_seq,
-            )
-            return added
-
-        added = replan_on_conflict(rewrite)
-        rows = sum(e.rows for e in added)
-        nbytes = sum(f.bytes for f in files)
-        ckpt.mark_done(unit, files=len(files), files_out=len(added), rows=rows, bytes=nbytes)
-        with lock:
-            metrics["files_in"] += len(files)
-            metrics["files_out"] += len(added)
-            metrics["bytes_in"] += nbytes
-            metrics["rows"] += rows
+        # the read applies every newer delete and aligns files written
+        # under older schema versions; a MoR delete landing before the
+        # commit fails it and the unit re-plans (round-2 ADVICE #2)
+        return rewrite_unit(
+            table, spark, "compact", job_id, f"{job_id}:{unit}",
+            plan=lambda meta, snap: Plan(files),
+            write=lambda rows, _: (table._write_data_files(
+                spark, rows, target_file_count=len(bins)), None))
 
     try:
         # Units (partitions) run as CONCURRENT Spark jobs: each unit's
@@ -256,36 +221,38 @@ def compact(
         units = sorted(plan.items())
         pool = min(MAX_CONCURRENT_UNITS, max(1, len(units)))
         if pool <= 1:
-            for item in units:
-                run_unit(item)
+            records = [run_unit(item) for item in units]
         else:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=pool) as ex:
-                list(ex.map(run_unit, units))
+                records = list(ex.map(run_unit, units))
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
         spark.conf.set("spark.sql.files.openCostInBytes", prev_oc)
+
     # obsolete-delete GC: read_entries applied every relevant equality
     # delete to the rewritten rows, and rewritten files carry NEW seqs —
     # a delete file whose seq is <= every live data file's seq can no
     # longer remove anything and is dropped (merge-on-read cleanup)
-    data = table.files(content="data")
-    dels = table.delete_files()
-    if dels and data:
+    def spent_deletes(meta: TableMetadata, snap: Snapshot | None) -> Plan | None:
+        dels = table._delete_entries(snap)
+        data = table.files(snap.snapshot_id, content="data") if dels else []
+        if not data:
+            return None
         min_seq = min((e.seq or 0) for e in data)
         obsolete = [d for d in dels if (d.seq or 0) <= min_seq]
-        if obsolete:
-            table.rewrite_files(
-                [d.path for d in obsolete], [],
-                operation="drop-deletes",
-                commit_key=f"{job_id}:drop-deletes",
-                extra_summary={"job_id": job_id,
-                               "dropped_delete_files": len(obsolete)},
-            )
-            metrics["dropped_delete_files"] = len(obsolete)
-    dt = time.monotonic() - t0
-    metrics["seconds"] = dt
-    metrics["gb_per_min"] = (metrics["bytes_in"] / 1e9) / (dt / 60) if dt > 0 else 0.0
-    metrics["files_per_min"] = metrics["files_in"] / (dt / 60) if dt > 0 else 0.0
-    return metrics
+        return Plan([], obsolete) if obsolete else None
+
+    dropped = rewrite_unit(table, spark, "drop-deletes", job_id,
+                           f"{job_id}:drop-deletes", spent_deletes)
+    out = unit_record(job_id, None, t0)
+    ran = [r for r in records if not r["resumed"]]
+    for k in ("files_in", "files_out", "bytes_in", "bytes_out", "rows"):
+        out[k] = sum(r[k] for r in ran)
+    out["snapshot_id"] = max((r["snapshot_id"] for r in records + [dropped]
+                              if r["snapshot_id"] is not None), default=None)
+    out["rows_per_s"] = out["rows"] / out["seconds"] if out["seconds"] > 0 else 0.0
+    out.update(partitions=len(plan), skipped_units=len(records) - len(ran),
+               dropped_delete_files=dropped["delete_files"])
+    return out

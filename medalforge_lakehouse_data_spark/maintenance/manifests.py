@@ -12,6 +12,7 @@ import time
 
 from medalforge_lakehouse_data_spark.format.metadata import read_manifest, write_manifest
 from medalforge_lakehouse_data_spark.format.table import Table
+from medalforge_lakehouse_data_spark.maintenance.rewrite import default_job_id
 
 
 def rewrite_manifests(
@@ -20,7 +21,7 @@ def rewrite_manifests(
     job_id: str | None = None,
 ) -> dict:
     t0 = time.monotonic()
-    job_id = job_id or f"manifests-{int(time.time())}"
+    job_id = job_id or default_job_id("manifests")
     if table.metadata().current_snapshot() is None:
         return {"job_id": job_id, "manifests_in": 0, "manifests_out": 0}
     # All reads happen inside build(), i.e. UNDER the commit lock: a commit

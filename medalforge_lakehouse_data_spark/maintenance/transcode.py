@@ -8,9 +8,10 @@ batches; zero per-row Python at the Spark layer; one atomic snapshot.
 
 The optional ``min_psnr`` gate quarantines rows whose re-encode would
 lose more than allowed: those keep their ORIGINAL bytes (never degrade
-silently), and the count is reported. On the live table the job is one
-unit under ``replan_on_conflict``: a merge-on-read delete committed
-between its scan and its commit makes it re-plan and re-read."""
+silently), and the count is reported. The job is one ``rewrite_unit``:
+it reads exactly the data files it lists and replaces, so a file
+appended meanwhile stays as it is, and on the live table a merge-on-read
+delete committed between the read and the commit makes it re-plan."""
 
 from __future__ import annotations
 
@@ -21,9 +22,11 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from medalforge_lakehouse_data_spark.format.table import Table, replan_on_conflict
+from medalforge_lakehouse_data_spark.format.metadata import Snapshot, TableMetadata
+from medalforge_lakehouse_data_spark.format.table import Table
 from medalforge_lakehouse_data_spark.functions import codec
 from medalforge_lakehouse_data_spark.functions.phash import phash64
+from medalforge_lakehouse_data_spark.maintenance.rewrite import Plan, default_job_id, rewrite_unit
 
 
 def _transcoder(cols: list[str], target_fmt: str, quality: int,
@@ -74,72 +77,49 @@ def transcode_rewrite(
     job_id: str | None = None,
     target_file_count: int | None = None,
 ) -> dict:
+    """Re-encode every data file of the table (or of the pinned
+    ``snapshot_id``) as one ``rewrite_unit``; returns its record plus
+    ``kept_original``, the rows that kept their original bytes."""
     t0 = time.monotonic()
-    job_id = job_id or f"transcode-{int(time.time())}"
+    job_id = job_id or default_job_id("transcode")
+    unit: dict = {}
 
-    def rewrite():
-        # full rewrite: every data file is replaced AND, since table.scan
-        # already applied any equality deletes to the rows, the spent
-        # delete files are removed in the same commit
-        files = table.files(snapshot_id)
-        if not files:
-            return {"job_id": job_id, "rows": 0, "files_in": 0}
-        schema = table.schema
-        cols = schema.fieldNames()
+    def plan(meta: TableMetadata, snap: Snapshot | None) -> Plan | None:
+        # full rewrite: every data file is replaced AND, since the read
+        # applies any equality deletes to the rows, the spent delete
+        # files are removed in the same commit
+        entries = table.files(snap.snapshot_id) if snap is not None else []
+        data = [e for e in entries if e.content == "data"]
+        if not data:
+            return None
         # per-table deflate level override (codec.zlib-level); None → the
         # codec's per-format default (raw 6, lossy 1 — see codec.py)
-        zprop = table.metadata().properties.get("codec.zlib-level")
-        zlevel = int(zprop) if zprop is not None else None
-        plan_seq = (snapshot_id if snapshot_id is not None
-                    else table.metadata().last_sequence)
-        df = table.scan(spark, snapshot_id)
+        zprop = meta.properties.get("codec.zlib-level")
+        unit.update(schema=meta.schema, zlevel=int(zprop) if zprop is not None else None)
+        return Plan(data, [e for e in entries if e.content == "deletes"])
+
+    def write(rows, _):
+        schema = unit["schema"]
         schema_plus = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                                 for f in schema.fields)
-        out = df.mapInPandas(_transcoder(cols, target_fmt, quality, min_psnr, zlevel),
-                             schema=f"{schema_plus}, _kept_original int")
+        out = rows.mapInPandas(
+            _transcoder(schema.fieldNames(), target_fmt, quality, min_psnr, unit["zlevel"]),
+            schema=f"{schema_plus}, _kept_original int")
         # NO cache of the transcoded rows: the write below is their only
         # consumer, and materializing the whole (at scale: table-sized)
         # image payload into executor memory bought nothing but memory
         # pressure — the kept-original recount afterwards reads ONLY the
         # fmt column of the freshly written files (parquet column pruning
         # skips the blobs), a metadata-cheap job instead of a table-sized
-        # cache (guide §5).
+        # cache (guide §5). Their rows already had the deletes applied.
         added = table._write_data_files(
-            spark, out.drop("_kept_original"), target_file_count=target_file_count
-        )
-        snap = table.rewrite_files(
-            [e.path for e in files],
-            added,
-            operation="transcode",
-            commit_key=f"{job_id}:rewrite",
-            extra_summary={"job_id": job_id, "target_fmt": target_fmt,
-                           "quality": quality},
-            # a MoR delete landing between scan and commit would be
-            # silently outrun by the rewrite's fresh seq (round-2 ADVICE
-            # #2): the commit fails and the live-table job re-plans
-            validate_from_sequence=plan_seq,
-        )
-        kept_originals = (
-            table.read_entries(spark, added)
-            .filter(F.col("fmt") != target_fmt).select("fmt").count()
-        )
-        dt = time.monotonic() - t0
-        rows = sum(e.rows for e in added)
-        bytes_in = sum(e.bytes for e in files)
-        return {
-            "job_id": job_id,
-            "snapshot_id": snap.snapshot_id,
-            "rows": rows,
-            "files_in": len(files),
-            "files_out": len(added),
-            "bytes_in": bytes_in,
-            "bytes_out": sum(e.bytes for e in added),
-            "kept_original": kept_originals,
-            "seconds": dt,
-            "gb_per_min": (bytes_in / 1e9) / (dt / 60) if dt > 0 else 0.0,
-            "rows_per_s": rows / dt if dt > 0 else 0.0,
-        }
+            spark, out.drop("_kept_original"), target_file_count=target_file_count)
+        unit["kept"] = (table.read_entries(spark, added, apply_deletes=False)
+                        .filter(F.col("fmt") != target_fmt).select("fmt").count())
+        return added, None
 
-    # a pinned snapshot has nothing newer to re-plan from: its conflict
-    # reaches the caller, as in cluster_rewrite
-    return rewrite() if snapshot_id is not None else replan_on_conflict(rewrite)
+    rec = rewrite_unit(table, spark, "transcode", job_id, f"{job_id}:rewrite", plan, write,
+                       snapshot_id=snapshot_id,
+                       extra_summary={"target_fmt": target_fmt, "quality": quality},
+                       t0=t0)
+    return {**rec, "kept_original": unit.get("kept", 0)}

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from medalforge_lakehouse_data_spark.format import Table
 from medalforge_lakehouse_data_spark.maintenance import compaction, clustering, expire, manifests
-from medalforge_lakehouse_data_spark.maintenance.checkpoint import JobCheckpoint
 from medalforge_lakehouse_data_spark.testing.datagen import IMAGES_SCHEMA, images_df
 
 N = 3000
@@ -53,39 +52,43 @@ def test_compaction_preserves_rows_and_reduces_files(spark, img_table):
     assert (pinned.h, pinned.n) == (before.h, before.n)
 
 
-def test_compaction_resume_no_duplicate_commits(spark, img_table, tmp_path):
+def _unit_keys(t: Table, job_id: str) -> list[str]:
+    return [s.commit_key for s in t.snapshots()
+            if (s.commit_key or "").startswith(f"{job_id}:part:")]
+
+
+def test_compaction_resume_no_duplicate_commits(spark, img_table):
     t = img_table
-    ckpt_root = str(tmp_path / "ckpt")
-    m1 = compaction.compact(t, spark, target_file_bytes=64 * 1024 * 1024,
-                            job_id="job-A", checkpoint_root=ckpt_root)
+    m1 = compaction.compact(t, spark, target_file_bytes=64 * 1024 * 1024, job_id="job-A")
     n_snaps = len(t.snapshots())
     n = _fingerprint(spark, t)
     # re-run same job (simulates restart after kill at the end)
-    m2 = compaction.compact(t, spark, target_file_bytes=64 * 1024 * 1024,
-                            job_id="job-A", checkpoint_root=ckpt_root)
+    m2 = compaction.compact(t, spark, target_file_bytes=64 * 1024 * 1024, job_id="job-A")
     assert len(t.snapshots()) == n_snaps  # no duplicate commits
     n2 = _fingerprint(spark, t)
     assert (n.h, n.n) == (n2.h, n2.n)
-    ck = JobCheckpoint(ckpt_root, "job-A")
-    s = ck.summary()
-    assert s["units_done"] == s["units_total"] > 0
+    # the commit log is the ledger: every unit committed once, and the
+    # re-run found all of them there
+    keys = _unit_keys(t, "job-A")
+    assert len(keys) == len(set(keys)) == m1["partitions"] > 0
+    assert m2["skipped_units"] == m2["partitions"] == m1["partitions"]
+    assert m2["files_in"] == 0
 
 
-def test_checkpoint_partial_resume(spark, img_table, tmp_path):
-    """A unit marked done is skipped; commit_key makes the table commit a
-    no-op even if the checkpoint record was lost (belt and braces)."""
+def test_checkpoint_partial_resume(spark, img_table):
+    """A unit whose commit key is already in the log is skipped: the
+    re-run commits only the other units, each once."""
     t = img_table
-    ckpt_root = str(tmp_path / "ckpt2")
     plan = compaction.plan_compaction(t, 64 * 1024 * 1024)
     assert len(plan) >= 2  # two fmt partitions
-    # pretend a previous run finished the first partition
+    # pretend a previous run committed the first partition's unit
     first_key = sorted(plan.items())[0][0]
     unit = "part:" + ",".join(f"{k}={v}" for k, v in first_key)
-    ck = JobCheckpoint(ckpt_root, "job-B")
-    ck.mark_done(unit, files=0, rows=0, bytes=0)
-    m = compaction.compact(t, spark, target_file_bytes=64 * 1024 * 1024,
-                           job_id="job-B", checkpoint_root=ckpt_root)
+    t.rewrite_files([], [], operation="compact", commit_key=f"job-B:{unit}")
+    m = compaction.compact(t, spark, target_file_bytes=64 * 1024 * 1024, job_id="job-B")
     assert m["skipped_units"] == 1
+    keys = _unit_keys(t, "job-B")
+    assert sorted(keys) == sorted(set(keys)) and len(keys) == len(plan)
 
 
 def test_clustering_tightens_bounds_and_prunes(spark, img_table):
